@@ -22,8 +22,8 @@ object PipelineDemo {
     val Array(weatherCsv, trafficCsv, forecastJson, workDir) =
       if (args.length == 4) args
       else Array(
-        "/root/reference/data/weatherdata2015.csv",
-        "/root/reference/data/TrafficCounts2015.csv",
+        HistoricalTraining.WeatherCsv,
+        HistoricalTraining.TrafficCsv,
         "src/test/resources/forecast_fixture.json",
         java.nio.file.Files.createTempDirectory("graft-demo").toString)
 

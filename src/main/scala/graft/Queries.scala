@@ -4373,8 +4373,8 @@ object Queries {
       java.nio.file.Files.writeString(json,
         rows.mkString("[\n", ",\n", "\n]"))
       val features = graft.pipelines.HistoricalTraining.fullData(s,
-        "/root/reference/data/weatherdata2015.csv",
-        "/root/reference/data/TrafficCounts2015.csv")
+        graft.pipelines.HistoricalTraining.WeatherCsv,
+        graft.pipelines.HistoricalTraining.TrafficCsv)
       val (train, _) =
         graft.pipelines.HistoricalTraining.temporalSplit(features, 7000)
       val model = graft.ml.TrafficModel.fit(

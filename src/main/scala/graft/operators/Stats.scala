@@ -964,7 +964,9 @@ object Stats {
     // periods² rows to block storage (measured: checkpointing the
     // pairs cost more than the original global sort it was meant to
     // beat)
-    val ratio = col("dy").cast("double") / col("dx").cast("double")
+    // total under ANSI: the bucket filter is pushed into the self-join
+    // ahead of ti < tj, where the diagonal's dx = 0 would throw
+    val ratio = try_divide(col("dy").cast("double"), col("dx").cast("double"))
     val s0 = pairs.agg(count(lit(1)), min(ratio), max(ratio)).first()
     val nPairs = s0.getLong(0)
     val target = (nPairs + 1L) / 2L

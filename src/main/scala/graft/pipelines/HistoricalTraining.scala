@@ -15,6 +15,13 @@ import graft.sources.CsvSources
   */
 object HistoricalTraining {
 
+  /** Where the reference's two static 2015 inputs live (SURVEY §0):
+    * the KNMI hourly weather and the traffic counts.
+    */
+  val RefData = "/root/reference/data"
+  val WeatherCsv = s"$RefData/weatherdata2015.csv"
+  val TrafficCsv = s"$RefData/TrafficCounts2015.csv"
+
   /** Cells 2–3: clean the KNMI frame.
     *  - F1 date rebuild from YYYYMMDD (string, "yyyy-MM-dd");
     *  - P2 rename KNMI codes → names;

@@ -159,7 +159,26 @@ class CurationOpsSpec extends SparkSpec {
   test("theilSenSlope refinement (r14): an outlier-stretched series " +
       "that forces multi-level bucket refinement, and an exact tie-run " +
       "series, both match the driver-side brute-force median") {
-    import graft.operators.Stats
+    theilSenRefinementCase()
+  }
+
+  test("theilSenSlope refinement matches the brute-force median under " +
+      "ANSI mode too (the pushed-down bucket filter sees dx = 0)") {
+    sys.props(GraftSession.AnsiOverrideProp) = "true"
+    try {
+      GraftSession.tune(spark)
+      assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+      theilSenRefinementCase()
+    } finally {
+      sys.props.remove(GraftSession.AnsiOverrideProp)
+      GraftSession.tune(spark)
+    }
+  }
+
+  /** Both series exceed the 32 768-pair rank bound, so the bucket
+    * refinement loop runs before the final rank.
+    */
+  private def theilSenRefinementCase(): Unit = {
     // 299 near-collinear points (slope ~2, deterministic jitter) plus
     // one extreme outlier: the level-1 ratio range is stretched ~1e9×,
     // so all ~44.5k dense pairs share level-1 bucket 0 (> the 32 768

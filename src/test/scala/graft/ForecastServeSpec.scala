@@ -20,7 +20,7 @@ class ForecastServeSpec extends SparkSpec {
     */
   lazy val modelPath: String = {
     val features = HistoricalTraining.fullData(spark,
-      s"$RefData/weatherdata2015.csv", s"$RefData/TrafficCounts2015.csv")
+      HistoricalTraining.WeatherCsv, HistoricalTraining.TrafficCsv)
     val (train, _) = HistoricalTraining.temporalSplit(features, 7000)
     val model = TrafficModel.fit(
       TrafficModel.randomForest(numTrees = 10, maxDepth = 8), train)
@@ -43,6 +43,7 @@ class ForecastServeSpec extends SparkSpec {
   }
 
   test("serving run is idempotent; overlapping horizon appends only new") {
+    assumeRefData()
     val wh = tmpDir("wh-serve")
     val (w1, t1) = ForecastServe.run(spark, fixture, modelPath, wh)
     assert(w1 == 12L && t1 == 12L)
@@ -61,6 +62,7 @@ class ForecastServeSpec extends SparkSpec {
   }
 
   test("F13: stored Intensity = int(pred*10) within model range") {
+    assumeRefData()
     val wh = tmpDir("wh-intensity")
     ForecastServe.run(spark, fixture, modelPath, wh)
     val traffic = graft.sinks.StarSchemaSink.readTable(spark, wh, "traffic")
@@ -69,6 +71,7 @@ class ForecastServeSpec extends SparkSpec {
   }
 
   test("streaming: AvailableNow drain of a landing dir, exactly-once") {
+    assumeRefData()
     val landing = tmpDir("landing")
     val wh = tmpDir("wh-stream")
     val ckpt = tmpDir("ckpt")

@@ -11,11 +11,12 @@ class MLQualitySpec extends SparkSpec {
 
   lazy val split = {
     val features = HistoricalTraining.fullData(spark,
-      s"$RefData/weatherdata2015.csv", s"$RefData/TrafficCounts2015.csv")
+      HistoricalTraining.WeatherCsv, HistoricalTraining.TrafficCsv)
     HistoricalTraining.temporalSplit(features, 7000)
   }
 
   test("M2/M5/M6: RandomForest clears the baseline gate") {
+    assumeRefData()
     val (train, test) = split
     val model = TrafficModel.fit(TrafficModel.randomForest(), train)
     val scored = TrafficModel.predict(model, test)
@@ -27,6 +28,7 @@ class MLQualitySpec extends SparkSpec {
   }
 
   test("M7: Hour dominates feature importances (ref: 78.65%)") {
+    assumeRefData()
     val (train, _) = split
     val model = TrafficModel.fit(TrafficModel.randomForest(), train)
     val imp = TrafficModel.featureImportances(model)
@@ -38,6 +40,7 @@ class MLQualitySpec extends SparkSpec {
   }
 
   test("M4: DecisionTree(max_depth=13) also beats the reference DT MAE band") {
+    assumeRefData()
     val (train, test) = split
     val model = TrafficModel.fit(TrafficModel.decisionTree(13), train)
     val scored = TrafficModel.predict(model, test)
@@ -49,6 +52,7 @@ class MLQualitySpec extends SparkSpec {
   }
 
   test("M3 stand-in: GBT (third model family) beats the reference SVR band") {
+    assumeRefData()
     val (train, test) = split
     val model = TrafficModel.fit(TrafficModel.gbt(maxIter = 30), train)
     val scored = TrafficModel.predict(model, test)
@@ -60,6 +64,7 @@ class MLQualitySpec extends SparkSpec {
   }
 
   test("M3: RFF kernel ridge (RBF function class) beats the reference SVR") {
+    assumeRefData()
     import graft.ml.KernelRidge
     val (train, test) = split
     // deterministic (fixed seed): this exact fit beats the reference
@@ -78,6 +83,7 @@ class MLQualitySpec extends SparkSpec {
   }
 
   test("M3: kernel ridge SVR parity holds across seeds (not seed-lucky)") {
+    assumeRefData()
     import graft.ml.KernelRidge
     val (train, test) = split
     // Same hyperparameters as fitSvrParity, three RFF draws: the
@@ -103,6 +109,7 @@ class MLQualitySpec extends SparkSpec {
   }
 
   test("M3/K4: kernel ridge save/load round-trips and scores identically") {
+    assumeRefData()
     import graft.ml.KernelRidge
     val (train, test) = split
     val model = KernelRidge.fit(train, numFeatures = 64)
@@ -117,6 +124,7 @@ class MLQualitySpec extends SparkSpec {
   }
 
   test("K4/S7: model save/load round-trips and scores identically") {
+    assumeRefData()
     val (train, test) = split
     val model = TrafficModel.fit(
       TrafficModel.randomForest(numTrees = 5, maxDepth = 5), train)
@@ -130,6 +138,7 @@ class MLQualitySpec extends SparkSpec {
 
   test("hyperparameter search: CV picks the notebook's deep tree over " +
       "a shallow one and the winner clears the MAE gate") {
+    assumeRefData()
     val (train, test) = split
     val (best, byDepth) = TrafficModel.tuneTreeDepth(train, Seq(4, 13))
     info(byDepth.toSeq.sorted.map { case (d, m) => f"depth=$d mae=$m%.5f" }

@@ -7,7 +7,12 @@ package graft
 class QueriesSpec extends SparkSpec {
 
   test("every registered query runs and returns rows at sf0.001") {
-    val failures = Queries.specs.flatMap { sp =>
+    // the one entry that trains on the reference 2015 CSVs
+    val refDataEntry = "q_pipe_serve_latency"
+    val missing = missingRefCsvs
+    val toRun = Queries.specs
+      .filterNot(sp => sp.name == refDataEntry && missing.nonEmpty)
+    val failures = toRun.flatMap { sp =>
       try {
         val n = sp.fn(spark, Sf0001).count()
         if (n > 0) None else Some(s"${sp.name}: 0 rows")
@@ -16,6 +21,9 @@ class QueriesSpec extends SparkSpec {
       }
     }
     assert(failures.isEmpty, failures.mkString("; "))
+    if (missing.nonEmpty)
+      cancel(s"$refDataEntry not run, reference data absent: " +
+        missing.mkString(", "))
   }
 
   test("oracle map only references registered queries") {
