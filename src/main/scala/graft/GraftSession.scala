@@ -40,9 +40,10 @@ object GraftSession {
     // shuffles, but this engine's verify/rerank stages carry seconds
     // of per-row compute in sub-MB shuffles (token arrays, exact
     // intersections, PQ distance sums), and the floor collapsed them
-    // to ONE task (measured: q_d_allpairs_array_verify's two verify
-    // stages 2.3 s + 2.1 s single-task at the default; at a lower
-    // floor they spread and the entry reads 5.4 → 2.2 s).
+    // to ONE task (measured on the all-pairs cosine join's former
+    // array-intersect verify: two verify stages 2.3 s + 2.1 s
+    // single-task at the default; at a lower floor they spread and
+    // the query read 5.4 → 2.2 s).
     // parallelismFirst (default on) already targets the session's
     // core count; lowering the floor just lets it. Scale-invariant:
     // at production shuffle sizes (total ≫ cores × floor) the floor

@@ -3828,16 +3828,18 @@ object Queries {
       .orderBy("inner_id", "outer_id")
   }
 
-  /** Pair-budget CAPPED containment (r14, judge ask #6): q_d_containment
-    * through Dedup.containmentPairsBudgeted in capped mode — anchor
-    * GRAMS kept cheapest-first (ascending (cand = anchors×postings,
-    * g)) while the running estimate fits the budget (500 vs the
-    * sf0.01 estimate of 525 — keeps 12 of the 25 full pairs, so the
-    * cap genuinely bites at Verify scale with a non-empty output),
-    * and only pairs whose anchor gram survived reach
-    * the instr verify. The oracle replays the identical stats +
-    * cumulative keep rule in SQL; the Spark side's distributed prefix
-    * scan must land on the same keep set bit-for-bit.
+  /** Pair-budget CAPPED containment: q_d_containment under
+    * `PairBudget.Cap(24)` — anchor GRAMS kept cheapest-first
+    * (ascending (cand = anchors×postings, g); grams with a single
+    * posting, whose only candidate is a self-pair, are not charged)
+    * while the running estimate fits the budget, and only pairs whose
+    * anchor gram survived reach the instr verify. Against full
+    * estimates of 52 / 49 / 524 the cap keeps 12 of 28 pairs at
+    * sf0.001, 12 of 25 at sf0.01 and 12 of 248 at sf0.1, so it bites
+    * at every scale with a non-empty output. The oracle replays the
+    * identical stats + cumulative keep rule in SQL; the Spark side's
+    * distributed prefix scan must land on the same keep set
+    * bit-for-bit.
     */
   val qDContainmentBudget = q(
     "q_d_containment_budget",
@@ -3863,11 +3865,12 @@ object Queries {
       |post AS (SELECT doc_id AS outer_id, g FROM ann WHERE rn <= ${graft.operators.Dedup.DefaultMaxBucket}),
       |na AS (SELECT g, COUNT(*) AS na FROM an GROUP BY g),
       |np2 AS (SELECT g, COUNT(*) AS np FROM post GROUP BY g),
-      |bstat AS (SELECT na.g, na.na * np2.np AS cand FROM na JOIN np2 USING (g)),
+      |bstat AS (SELECT na.g, na.na * np2.np AS cand FROM na JOIN np2 USING (g)
+      |          WHERE np2.np > 1),
       |keep AS (SELECT g FROM (
       |    SELECT g, SUM(cand) OVER (ORDER BY cand, g
       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-      |    FROM bstat) WHERE cum <= 500),
+      |    FROM bstat) WHERE cum <= 24),
       |cand AS (SELECT inner_id, outer_id
       |         FROM an JOIN keep USING (g) JOIN post USING (g)
       |         WHERE inner_id <> outer_id)
@@ -3877,9 +3880,9 @@ object Queries {
       |JOIN documents b ON outer_id = b.doc_id
       |WHERE len(a.text) < len(b.text) AND position(a.text IN b.text) > 0
       |ORDER BY inner_id, outer_id""".stripMargin) { (s, d) =>
-    graft.operators.Dedup.containmentPairsBudgeted(
-        Tables.documents(s, d), "doc_id", "text",
-        pairBudget = 500L, refuse = false, w = 4)
+    graft.operators.Dedup.containmentPairs(
+        Tables.documents(s, d), "doc_id", "text", w = 4,
+        budget = graft.operators.PairBudget.Cap(24L))
       .orderBy("inner_id", "outer_id")
   }
 
@@ -4126,26 +4129,6 @@ object Queries {
         Tables.documents(s, d).filter(col("doc_id") < 1000),
         "doc_id", "text"),
       "doc_id", "text", minCos2Ppm = 902500L)
-      .orderBy("id_a", "id_b")
-  }
-
-  /** The SAME exact sim-join forced through the ARRAY-INTERSECT
-    * verify (maxTokensForArrayVerify = MaxValue; the r10 default is
-    * the measured-faster posting re-join — AbVerifyPaths, BASELINE
-    * §6): identical oracle, identical output, so the driver
-    * hash-gates path-equivalence at catalog scale, and the bench row
-    * is the standing array-vs-posting A/B that keeps the default
-    * choice honest every round.
-    */
-  val qDAllPairsArrayVerify = q(
-    "q_d_allpairs_array_verify", allPairsCosineOracle) { (s, d) =>
-    import graft.operators.Dedup
-    Dedup.allPairsCosine(
-      Dedup.exactDedup(
-        Tables.documents(s, d).filter(col("doc_id") < 1000),
-        "doc_id", "text"),
-      "doc_id", "text", minCos2Ppm = 902500L,
-      maxTokensForArrayVerify = Long.MaxValue)
       .orderBy("id_a", "id_b")
   }
 
@@ -5680,15 +5663,15 @@ object Queries {
        |$duckBandJaccardTail""".stripMargin
   }
 
-  /** Pair-BUDGETED variant of [[duckBandJaccardTail]] (r13): per-band-
-    * bucket candidate mass (cool C(cnt,2), hot star cnt−1), then a
-    * cumulative keep in ascending (cand, band, key) order while the
-    * running estimate fits `budget` — whole buckets only, the exact
-    * keep rule of Dedup.bandCandidatePairsBudgeted. The ROWS frame is
+  /** Pair-CAPPED variant of [[duckBandJaccardTail]]: per-band-bucket
+    * candidate mass (cool C(cnt,2), hot star cnt−1), then a cumulative
+    * keep in ascending (cand, band, key) order while the running
+    * estimate fits `budget` — whole buckets only, the exact keep rule
+    * of the band chains under PairBudget.Cap. The ROWS frame is
     * spelled out because (cand, band, key) is a total order the Spark
     * window also uses row-wise.
     */
-  private def duckBandJaccardTailBudgeted(budget: Long): String =
+  private def duckBandJaccardTailCapped(budget: Long): String =
     s"""b2 AS (SELECT doc_id, band,
        |         list_reduce(list_prepend(0::BIGINT, list_slice(sig, band*4+1, band*4+4)),
        |           (a, v) -> (a * 31 + v) % 1000000007) AS key
@@ -5722,7 +5705,7 @@ object Queries {
        |      FROM pairs JOIN hd ha ON ha.doc_id = id_a
        |                 JOIN hd hb ON hb.doc_id = id_b)""".stripMargin
 
-  private def duckMinhashPairChainBudgeted(budget: Long): String = {
+  private def duckMinhashPairChainCapped(budget: Long): String = {
     val (ca, cb) = graft.expressions.MinHashSig.coefficients(64)
     s"""${duckShingleHashes(3)},
        |hd AS (SELECT doc_id, list_distinct(hs) AS hs FROM h),
@@ -5731,7 +5714,7 @@ object Queries {
        |s AS (SELECT doc_id, list_transform(range(64), i ->
        |        list_min(list_transform(hs, x -> (x * ca[i+1] + cb[i+1]) % 1000000007))) AS sig
        |      FROM hd CROSS JOIN coef),
-       |${duckBandJaccardTailBudgeted(budget)}""".stripMargin
+       |${duckBandJaccardTailCapped(budget)}""".stripMargin
   }
 
   /** The OPH sibling of [[duckMinhashPairChain]]: ONE permutation,
@@ -5927,38 +5910,37 @@ object Queries {
       .orderBy("id_a", "id_b")
   }
 
-  /** Pair-budget CAPPED minhash pairs (r13, VERDICT ask #5): the same
-    * stack as q_d_minhash_pairs, but the candidate stage keeps whole
-    * band buckets cheapest-first while the estimated pair mass fits
-    * the budget — the output is a documented deterministic PREFIX of
+  /** Pair-budget CAPPED minhash pairs: q_d_minhash_pairs under
+    * `PairBudget.Cap(150)` — the candidate stage keeps whole band
+    * buckets cheapest-first while the estimated pair mass fits the
+    * budget, so the output is a documented deterministic subset of
     * the full pair set, and the oracle replays the keep rule exactly.
     * Budget 150 vs the sf0.01 estimate of ~357, so the cap genuinely
-    * drops buckets at the Verify scale. The refusal face (throwing
+    * drops buckets at the Verify scale. The `Refuse` face (throwing
     * with the hottest buckets named) is gated in PairBudgetSpec.
     */
   val qDMinhashPairsBudget = q(
     "q_d_minhash_pairs_budget",
     s"""WITH t AS (SELECT doc_id, $duckToks AS toks FROM documents),
-       |${duckMinhashPairChainBudgeted(150L)}
+       |${duckMinhashPairChainCapped(150L)}
        |SELECT id_a, id_b,
        |       CAST(inter AS DOUBLE) / (la + lb - inter) AS jaccard
        |FROM j WHERE CAST(inter AS DOUBLE) / (la + lb - inter) >= 0.5
        |ORDER BY id_a, id_b""".stripMargin) { (s, d) =>
-    graft.operators.Dedup.minhashNearDupsPolyBudgeted(
+    graft.operators.Dedup.minhashNearDupsPoly(
       Tables.documents(s, d), "doc_id", "text",
-      pairBudget = 150L, refuse = false)
+      budget = graft.operators.PairBudget.Cap(150L))
       .orderBy("id_a", "id_b")
   }
 
-  /** Pair-budget CAPPED edit-distance pairs (r13): q_d_editdist_pairs
-    * through the budgeted candidate stage (budget 150, capped mode) —
-    * Jaccard gate + thresholded Levenshtein run only on the
-    * affordable prefix.
+  /** Pair-budget CAPPED edit-distance pairs: q_d_editdist_pairs under
+    * `PairBudget.Cap(150)` — Jaccard gate + thresholded Levenshtein
+    * run only on the pairs of the kept band buckets.
     */
   val qDEditdistBudget = q(
     "q_d_editdist_budget",
     s"""WITH t AS (SELECT doc_id, $duckToks AS toks FROM documents),
-       |${duckMinhashPairChainBudgeted(150L)},
+       |${duckMinhashPairChainCapped(150L)},
        |jg AS (SELECT id_a, id_b FROM j
        |       WHERE CAST(inter AS DOUBLE) / (la + lb - inter) >= 0.4),
        |ed AS (SELECT id_a, id_b, levenshtein(da.text, db.text) AS dist
@@ -5966,14 +5948,14 @@ object Queries {
        |                JOIN documents db ON db.doc_id = id_b)
        |SELECT id_a, id_b, dist FROM ed WHERE dist <= 64
        |ORDER BY id_a, id_b""".stripMargin) { (s, d) =>
-    graft.operators.Dedup.editDistanceNearDupsBudgeted(
-      Tables.documents(s, d), "doc_id", "text",
-      pairBudget = 150L, refuse = false, maxDist = 64, jaccardFloor = 0.4)
+    graft.operators.Dedup.editDistanceNearDups(
+      Tables.documents(s, d), "doc_id", "text", maxDist = 64,
+      jaccardFloor = 0.4, budget = graft.operators.PairBudget.Cap(150L))
       .orderBy("id_a", "id_b")
   }
 
-  /** Pair-budget CAPPED interval-overlap join (r13): q_j9 through the
-    * budgeted bucket stage — buckets kept cheapest-first while
+  /** Pair-budget CAPPED interval-overlap join: q_j9 under
+    * `PairBudget.Cap(800)` — buckets kept cheapest-first while
     * Σ(nl·nr) fits the budget (800 vs the sf0.01 estimate of ~1946),
     * and a pair survives iff its canonical meeting bucket survived.
     * Epoch seconds are nonnegative, so the oracle's truncating `//`
@@ -6012,9 +5994,9 @@ object Queries {
     val er = ev.filter(col("event_type") === "error")
       .select(col("event_id").as("e_id"), col("sec").as("s2"),
         (col("sec") + 300).as("e2"))
-    graft.operators.RangeJoin.intervalOverlapBudgeted(
+    graft.operators.RangeJoin.intervalOverlap(
         p, er, "s1", "e1", "s2", "e2", bucket = 300L,
-        pairBudget = 800L, refuse = false)
+        budget = graft.operators.PairBudget.Cap(800L))
       .select(col("p_id"), col("e_id"),
         (least(col("e1"), col("e2"))
           - greatest(col("s1"), col("s2"))).as("overlap_sec"))
@@ -13613,7 +13595,7 @@ object Queries {
     qTCorpusDiversity, qTDiversitySketch, qTSourceDivergence, qTChi2Features, qTPrefixCache,
     qO11Mixture, qO16TokenBudget, qO19TemperatureMixture, qO20EpochRepeat,
     qO23ShardShuffle,
-    qDNgramJaccard, qDAllPairsCosine, qDAllPairsArrayVerify, qDAllPairsHistogram, qDMinhashBands, qDMinhashPairs, qDMinhashOph, qDCrossCorpus,
+    qDNgramJaccard, qDAllPairsCosine, qDAllPairsHistogram, qDMinhashBands, qDMinhashPairs, qDMinhashOph, qDCrossCorpus,
     qDEditDistPairs, qLFuzzyLinkage, qLFellegiSunter, qLScorerKappa,
     qDCcClusters, qDCcIncremental, qDCcDelete, qDCcMixedMaintenance,
     qPipeServeLatency, qDDupWeights,

@@ -301,26 +301,22 @@ object ConnectedComponents {
       .distinct()
   }
 
-  /** O(1)-to-driver convergence fingerprint: (edge count, xor-ish hash
-    * sum). A collision would need two distinct edge sets with equal
-    * count AND equal 64-bit hash sum mid-contraction — negligible, and
-    * `maxIter` bounds the loop regardless.
+  /** O(1)-to-driver convergence fingerprint: (edge count, hash sum).
+    * A collision would need two distinct edge sets with equal count
+    * AND equal 64-bit recombined hash sum mid-contraction — negligible,
+    * and `maxIter` bounds the loop regardless.
     *
-    * ANSI-safe checksum (r13 ANSI profile): the old sum(xxhash64)
-    * wrapped mod 2^64 by design — a fine checksum, but ANSI mode
-    * throws on the wrap. Sum the two 32-bit halves separately (each
-    * sum bounded by rows·2^32 < 2^63, can never overflow in EITHER
-    * mode) and recombine on the driver with plain JVM arithmetic,
-    * which ANSI does not govern. Bounds (r13 ADVICE): the no-throw
-    * guarantee holds for < 2^31 edges (each half-sum is bounded by
-    * edges·(2^32−1) < 2^63; beyond that an ANSI-on run can still
-    * overflow the half-sums), and the
-    * lo + 31*hi recombination collapses the pair back to 64 bits —
-    * comparable discriminating power to the old wrapped sum, not
-    * strictly more. Convergence detection needs only "changed vs
-    * unchanged between rounds", which this serves. r14: evaluated via
-    * `observe` on the round checkpoints (see [[run]]) rather than a
-    * standalone agg job.
+    * ANSI-safe for fewer than 2^31 edges: a plain sum(xxhash64) wraps
+    * mod 2^64, which ANSI mode throws on, so the two 32-bit halves of
+    * each hash are summed separately. Each half-sum is at most
+    * edges·(2^32−1), under 2^63 while edges < 2^31; past that bound an
+    * ANSI-on run can still overflow a half-sum. The driver recombines
+    * the halves as lo + 31*hi in plain JVM arithmetic, which ANSI does
+    * not govern; that collapses the pair back to 64 bits, about the
+    * discriminating power of the old wrapped sum. Convergence
+    * detection needs only "changed vs unchanged between rounds",
+    * which this serves. Evaluated via `observe` on the round
+    * checkpoints (see [[run]]) rather than a standalone agg job.
     */
   private def fingerprintExprs: Seq[org.apache.spark.sql.Column] = {
     val h = xxhash64(col("src"), col("dst"))

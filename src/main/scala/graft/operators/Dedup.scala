@@ -204,124 +204,48 @@ object Dedup {
     * needs inter ≲ 3·10⁶ distinct shared tokens per pair — lift the
     * decision products to DECIMAL(38) past that; the shape is
     * unchanged.
+    *
+    * `budget` ([[PairBudget]]) buckets candidates by prefix token.
     */
   def allPairsCosine(
       df: DataFrame,
       idCol: String,
       textCol: String,
       minCos2Ppm: Long = 490000L,
-      maxTokensForArrayVerify: Long = 0L): DataFrame = {
-    val (tok, posts, pre) = prefixIndex(df, idCol, textCol, minCos2Ppm)
-    allPairsCosineFrom(tok, posts, pre, minCos2Ppm, maxTokensForArrayVerify)
-  }
-
-  /** Pre-flight per-token candidate mass of [[allPairsCosine]]:
-    * cand_tk = C(prefix-postings at tk, 2) — an upper bound on the
-    * candidate self-join's rows at that token (the size-ratio filter
-    * only removes); one groupBy over the prefix-filtered posting
-    * metadata, NO pair materialization.
-    */
-  private[operators] def allPairsPrefixStats(pre: DataFrame): DataFrame =
-    pre.groupBy("tk").agg(count(lit(1)).as("pp"))
-      .withColumn("cand", expr("pp * (pp - 1) div 2"))
-
-  /** [[allPairsCosine]] under a pair budget (r14, judge ask #6):
-    * refuse=true declines when the prefix-candidate estimate exceeds
-    * `pairBudget` (naming the hottest prefix tokens); refuse=false
-    * keeps whole TOKENS cheapest-first (ascending (cand, tk),
-    * [[PrefixBudget]]'s distributed scan) — a pair survives iff at
-    * least one kept prefix token still links it.
-    */
-  def allPairsCosineBudgeted(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      pairBudget: Long,
-      refuse: Boolean = true,
-      minCos2Ppm: Long = 490000L,
-      maxTokensForArrayVerify: Long = 0L): DataFrame = {
-    require(pairBudget > 0, "pairBudget must be positive")
-    val (tok, posts, pre) = prefixIndex(df, idCol, textCol, minCos2Ppm)
-    val stats = allPairsPrefixStats(pre)
-    if (refuse) {
-      val est = Option(stats.agg(sum("cand")).first().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      if (est > pairBudget) {
-        val hot = stats.orderBy(col("cand").desc).limit(3).collect()
-          .map(r => s"tk=${r.get(0)} cand=${r.get(2)}").toSeq
-        throw PairBudgetExceeded(est, pairBudget,
-          "allPairsCosineBudgeted", hot)
-      }
-      allPairsCosineFrom(tok, posts, pre, minCos2Ppm, maxTokensForArrayVerify)
-    } else {
-      val keep = PrefixBudget.keepWithinBudget(
-        stats, "cand", pairBudget, Seq(col("cand"), col("tk"))).select("tk")
-      allPairsCosineFrom(tok, posts,
-        pre.join(keep, Seq("tk"), "left_semi"),
-        minCos2Ppm, maxTokensForArrayVerify)
-    }
-  }
-
-  /** Candidate gen + verify of [[allPairsCosine]] from a (possibly
-    * budget-filtered) prefix index.
-    */
-  private def allPairsCosineFrom(
-      tok: DataFrame,
-      posts: DataFrame,
-      pre: DataFrame,
-      minCos2Ppm: Long,
-      maxTokensForArrayVerify: Long): DataFrame = {
+      budget: PairBudget = PairBudget.Unlimited): DataFrame = {
+    val (posts, pre) = prefixIndex(df, idCol, textCol, minCos2Ppm)
+    // budget buckets are prefix TOKENS, cand_tk = C(prefix postings, 2):
+    // an upper bound on the candidate self-join's rows at that token
+    // (the size-ratio filter only removes). Under a cap a pair
+    // survives iff at least one kept prefix token still links it.
+    val kept = PairBudget.restrict(budget,
+      pre.groupBy("tk").agg(count(lit(1)).as("pp"))
+        .withColumn("cand", expr("pp * (pp - 1) div 2")),
+      "allPairsCosine", Seq("tk"), Seq(col("cand"), col("tk")))(pre).head
     // size filter folded into candidate gen (standard companion to the
     // prefix filter, prunes no valid pair): cos ≥ t forces
     // t²·max(a,b) ≤ min(a,b).
-    val cand = pre.select(col("id").as("id_a"), col("sz").as("sz_a"),
+    val cand = kept.select(col("id").as("id_a"), col("sz").as("sz_a"),
         col("tk"))
-      .join(pre.select(col("id").as("id_b"), col("sz").as("sz_b"),
+      .join(kept.select(col("id").as("id_b"), col("sz").as("sz_b"),
         col("tk")), Seq("tk"))
       .filter(col("id_a") < col("id_b") &&
         greatest(col("sz_a"), col("sz_b")) * lit(minCos2Ppm) <=
           least(col("sz_a"), col("sz_b")) * lit(1000000L))
       .select("id_a", "id_b", "sz_a", "sz_b").distinct()
-    // VERIFY PATH AUTO-SELECT (r10, was a manual prose flip), decided
-    // PER PAIR on max(sz_a, sz_b); both paths compute the identical
-    // exact intersection (DedupSpec proves pair-identity on a mixed
-    // fixture), so the split is invisible in the output.
-    //  - posting re-join (pairs above the cutoff): candidates join
-    //    each side's narrow (id, tk) postings, the group count
-    //    combines map-side. DEFAULT (cutoff 0): measured fastest at
-    //    both thresholds on the full sf0.1 corpus — 29.5 vs 41.0 s at
-    //    t=0.95 (544k pairs) and 114.5 vs 132.2 s at t=0.7 (8.43M
-    //    pairs; AbVerifyPaths, BASELINE §6) — and it is the only
-    //    shape that tolerates million-token documents (the array form
-    //    would carry such an array through the join per candidate).
-    //    (r9's opposite reading — array 73 s vs posting 160 s — was
-    //    measured against the OLD posting shape that joined
-    //    posts⋈posts per token before pairing.)
-    //  - array_intersect (pairs at or below the cutoff): both token
-    //    arrays attach by id and intersect map-side; kept as the
-    //    hash-gated alternative (q_d_allpairs_array_verify) for
-    //    candidate-sparse regimes where two joins against the
-    //    exploded postings cost more than carrying short arrays.
-    val small = cand.filter(
-      greatest(col("sz_a"), col("sz_b")) <= maxTokensForArrayVerify)
-    val large = cand.filter(
-      greatest(col("sz_a"), col("sz_b")) > maxTokensForArrayVerify)
-    val viaArray = small
-      .join(tok.select(col("id").as("id_a"), col("ts").as("ta")),
-        Seq("id_a"))
-      .join(tok.select(col("id").as("id_b"), col("ts").as("tb")),
-        Seq("id_b"))
-      .withColumn("inter",
-        size(array_intersect(col("ta"), col("tb"))).cast("long"))
-      .select("id_a", "id_b", "sz_a", "sz_b", "inter")
-    val viaPostings = large
+    // verify: candidates join each side's narrow (id, tk) postings and
+    // the group count combines map-side. Measured faster than
+    // intersecting the two token arrays on the full sf0.1 corpus —
+    // 29.5 vs 41.0 s at t=0.95 (544k pairs) and 114.5 vs 132.2 s at
+    // t=0.7 (8.43M pairs; BASELINE §6) — and it is the only shape that
+    // tolerates million-token documents (the array form would carry
+    // such an array through the join per candidate).
+    cand
       .join(posts.select(col("id").as("id_a"), col("tk")), Seq("id_a"))
       .join(posts.select(col("id").as("id_b"), col("tk")),
         Seq("id_b", "tk"))
       .groupBy("id_a", "id_b", "sz_a", "sz_b")
       .agg(count(lit(1)).as("inter"))
-      .select("id_a", "id_b", "sz_a", "sz_b", "inter")
-    viaArray.unionAll(viaPostings)
       .filter(col("inter") * col("inter") * lit(1000000L) >=
         lit(minCos2Ppm) * col("sz_a") * col("sz_b"))
       .withColumn("cos2_ppm",
@@ -330,15 +254,14 @@ object Dedup {
   }
 
   /** Shared prefix-index build for [[allPairsCosine]] and its
-    * histogram: (tok = per-doc distinct token arrays, posts = exploded
-    * postings, pre = prefix-filtered postings under the global
-    * (df asc, tk asc) order).
+    * histogram: (posts = exploded per-doc distinct tokens, pre =
+    * prefix-filtered postings under the global (df asc, tk asc) order).
     */
   private def prefixIndex(
       df: DataFrame,
       idCol: String,
       textCol: String,
-      minCos2Ppm: Long): (DataFrame, DataFrame, DataFrame) = {
+      minCos2Ppm: Long): (DataFrame, DataFrame) = {
     val tok = df.select(col(idCol).as("id"),
         array_distinct(TextOps.tokens(col(textCol))).as("ts"))
       .withColumn("sz", size(col("ts")).cast("long"))
@@ -355,7 +278,7 @@ object Dedup {
       .withColumn("pos", row_number().over(byDoc).cast("long"))
       .filter(col("pos") <= col("sz") - minov + lit(1L))
       .select("id", "sz", "tk")
-    (tok, posts, pre)
+    (posts, pre)
   }
 
   /** Per-token candidate histogram for [[allPairsCosine]] — the
@@ -376,7 +299,7 @@ object Dedup {
       idCol: String,
       textCol: String,
       minCos2Ppm: Long = 490000L): DataFrame = {
-    val (_, posts, pre) = prefixIndex(df, idCol, textCol, minCos2Ppm)
+    val (posts, pre) = prefixIndex(df, idCol, textCol, minCos2Ppm)
     val dfreq = posts.groupBy("tk").agg(count(lit(1)).as("df"))
     pre.groupBy("tk").agg(count(lit(1)).as("prefix_postings"))
       .join(dfreq, Seq("tk"))
@@ -393,10 +316,6 @@ object Dedup {
     */
   val MinhashP = 1000000007L
 
-  /** Hot-bucket cap shared by the MinHash band join and the SimHash
-    * pigeonhole blocker — AND interpolated into their oracle SQL
-    * (Queries.scala), so Scala and oracle can never silently drift.
-    */
   /** Substring-containment dedup: (inner, outer) pairs where doc
     * `inner`'s full text occurs verbatim inside doc `outer` — the
     * truncation/quote/mirror class of duplicate that Jaccard misses
@@ -450,72 +369,15 @@ object Dedup {
     * on replica-heavy corpora (BASELINE §6: raw 5.8 s at sf1 vs 1.2 s
     * composed). Run after [[exactDedup]] in production regardless:
     * byte-identical replicas carry no containment information.
+    *
+    * `budget` ([[PairBudget]]) buckets candidates by anchor gram (see
+    * [[containmentStats]]).
     */
   def containmentPairs(
       df: DataFrame, idCol: String, textCol: String,
       w: Int = 4,
-      maxPostings: Int = DefaultMaxBucket): DataFrame = {
-    val (docs, anchors, postings) =
-      containmentIndex(df, idCol, textCol, w, maxPostings)
-    containmentVerify(docs, anchors, postings)
-  }
-
-  /** Pre-flight per-gram candidate mass of [[containmentPairs]]:
-    * cand_g = (#docs anchored at g) × (#capped postings at g) — an
-    * upper bound on the candidate join's rows at that gram (it still
-    * counts self matches); one groupBy per branch over the posting
-    * metadata, NO pair materialization.
-    */
-  private[operators] def containmentStats(
-      anchors: DataFrame, postings: DataFrame): DataFrame =
-    anchors.groupBy("g").agg(count(lit(1)).as("na"))
-      .join(postings.groupBy("g").agg(count(lit(1)).as("np")), Seq("g"))
-      .withColumn("cand", col("na") * col("np"))
-
-  /** [[containmentPairs]] under a pair budget (r14, judge ask #6 —
-    * the containment twin of the minhash budget): refuse=true throws
-    * [[PairBudgetExceeded]] when Σcand exceeds `pairBudget` (naming
-    * the hottest anchor grams); refuse=false keeps whole GRAMS in
-    * ascending (cand, g) order while the running estimate fits — the
-    * output is the deterministic subset of pairs whose anchor gram
-    * survived, replayable as pure integer arithmetic over the gram
-    * stats. The keep rule runs as [[PrefixBudget.keepWithinBudget]]'s
-    * distributed prefix scan (gram stats are corpus-scale at 100 TB).
-    */
-  def containmentPairsBudgeted(
-      df: DataFrame, idCol: String, textCol: String,
-      pairBudget: Long,
-      refuse: Boolean = true,
-      w: Int = 4,
-      maxPostings: Int = DefaultMaxBucket): DataFrame = {
-    require(pairBudget > 0, "pairBudget must be positive")
-    val (docs, anchors, postings) =
-      containmentIndex(df, idCol, textCol, w, maxPostings)
-    val stats = containmentStats(anchors, postings)
-    if (refuse) {
-      val est = Option(stats.agg(sum("cand")).first().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      if (est > pairBudget) {
-        val hot = stats.orderBy(col("cand").desc).limit(3).collect()
-          .map(r => s"g=${r.get(0)} cand=${r.get(3)}").toSeq
-        throw PairBudgetExceeded(est, pairBudget,
-          "containmentPairsBudgeted", hot)
-      }
-      containmentVerify(docs, anchors, postings)
-    } else {
-      val keep = PrefixBudget.keepWithinBudget(
-        stats, "cand", pairBudget, Seq(col("cand"), col("g"))).select("g")
-      containmentVerify(docs,
-        anchors.join(keep, Seq("g"), "left_semi"), postings)
-    }
-  }
-
-  /** (docs, anchors, capped postings) of the containment chain —
-    * shared by the plain and budgeted faces.
-    */
-  private def containmentIndex(
-      df: DataFrame, idCol: String, textCol: String,
-      w: Int, maxPostings: Int): (DataFrame, DataFrame, DataFrame) = {
+      maxPostings: Int = DefaultMaxBucket,
+      budget: PairBudget = PairBudget.Unlimited): DataFrame = {
     val docs = df.select(col(idCol).as("id"), col(textCol).as("text"))
     // The posting table carries POLY-HASHED grams (8-byte longs via
     // the native TextShingleHashes kernel — the same base-31 fold of
@@ -552,17 +414,14 @@ object Dedup {
       .select(col("id").as("inner_id"), col("a.g").as("g"))
     val postings = ann.filter(col("rn") <= maxPostings)
       .select(col("id").as("outer_id"), col("g"))
-    (docs, anchors, postings)
-  }
-
-  /** Candidate join + exact instr verify of the containment chain. */
-  private def containmentVerify(
-      docs: DataFrame, anchors: DataFrame, postings: DataFrame): DataFrame = {
-    val cand = anchors
+    val kept = PairBudget.restrict(budget,
+      containmentStats(anchors, postings), "containmentPairs",
+      Seq("g"), Seq(col("cand"), col("g")))(anchors).head
+    // candidate join + exact instr verify
+    kept
       .join(postings, Seq("g"))
       .filter(col("inner_id") =!= col("outer_id"))
       .select("inner_id", "outer_id")
-    cand
       .join(docs.select(col("id").as("inner_id"), col("text").as("t_in")),
         Seq("inner_id"))
       .join(docs.select(col("id").as("outer_id"), col("text").as("t_out")),
@@ -572,6 +431,26 @@ object Dedup {
       .select("inner_id", "outer_id")
   }
 
+  /** Per-gram candidate mass of [[containmentPairs]] — the budget
+    * buckets are anchor GRAMS: cand_g = (#docs anchored at g) ×
+    * (#capped postings at g), an upper bound on the candidate join's
+    * rows at that gram; one groupBy per branch over the posting
+    * metadata, NO pair materialization. A gram with a single posting
+    * is left out: its one candidate is the anchor paired with itself,
+    * which the verify drops, so charging it would let self-pairs use
+    * up a cap.
+    */
+  private def containmentStats(
+      anchors: DataFrame, postings: DataFrame): DataFrame =
+    anchors.groupBy("g").agg(count(lit(1)).as("na"))
+      .join(postings.groupBy("g").agg(count(lit(1)).as("np"))
+        .filter(col("np") > 1), Seq("g"))
+      .withColumn("cand", col("na") * col("np"))
+
+  /** Hot-bucket cap shared by the MinHash band join and the SimHash
+    * pigeonhole blocker — AND interpolated into their oracle SQL
+    * (Queries.scala), so Scala and oracle can never silently drift.
+    */
   val DefaultMaxBucket = 200
 
   /** Native fused loop (graft.expressions.MinHashSig) — the hot path. */
@@ -617,6 +496,30 @@ object Dedup {
           lit(0L), (acc, v) => (acc * 31L + v) % MinhashP).as("key"))
     }: _*)
 
+  /** Per-bucket candidate-pair mass of [[bandCandidatePairs]] under
+    * the star cap, the budget stats of the band chains — one groupBy
+    * over the (id, bk) band table, NO pair materialization: cool
+    * buckets contribute C(cnt,2), hot buckets their star size (cnt−1).
+    * Σcand is an upper bound on emitted pairs (cross-band duplicates
+    * collapse in dropDuplicates). Under a cap whole buckets are kept
+    * in ascending (cand, band, key) order.
+    */
+  private def bandPairStats(
+      banded: DataFrame, maxBucket: Int): DataFrame =
+    banded.groupBy("bk").agg(count(lit(1)).as("cnt"))
+      .withColumn("cand",
+        when(col("cnt") <= maxBucket, expr("cnt * (cnt - 1) div 2"))
+          .otherwise(col("cnt") - 1))
+
+  /** `banded` under `budget`, bucketed by band key (see
+    * [[bandPairStats]]).
+    */
+  private def budgetBands(banded: DataFrame, maxBucket: Int,
+      budget: PairBudget, what: String): DataFrame =
+    PairBudget.restrict(budget,
+      bandPairStats(banded, maxBucket), what, Seq("bk"),
+      Seq(col("cand"), col("bk.band"), col("bk.key")))(banded).head
+
   /** Candidate pairs from an exploded band table `(id, bk)` with a
     * hot-bucket cap. A duplicate-heavy corpus — the exact workload
     * dedup exists for — concentrates identical signatures into
@@ -640,94 +543,6 @@ object Dedup {
     * cross the wire once per surviving pair side, not once per
     * band·bucket occupancy.
     */
-  /** Refusal signal of the pair-budget pre-flight (r13, VERDICT ask
-    * #5): at 100 TB an accidental 110× pair materialization is an
-    * incident, so the materializing pair operators can DECLINE a run
-    * whose estimated candidate mass exceeds a caller budget — the
-    * same philosophy as the bench drift gate refusing a contended
-    * run. Carries the estimate, the budget, and the hottest buckets
-    * so the caller can fix the corpus (or raise the budget)
-    * deliberately.
-    */
-  final case class PairBudgetExceeded(
-      estimated: Long, budget: Long, what: String, hottest: Seq[String])
-    extends RuntimeException(
-      s"$what: estimated candidate pairs $estimated exceed budget " +
-        s"$budget; hottest buckets: ${hottest.mkString("; ")}")
-
-  /** Pre-flight per-bucket candidate-pair mass of
-    * [[bandCandidatePairs]] under the star cap — one groupBy over the
-    * (id, bk) band table, NO pair materialization: cool buckets
-    * contribute C(cnt,2), hot buckets their star size (cnt−1).
-    * Σcand is an upper bound on emitted pairs (cross-band duplicates
-    * collapse in dropDuplicates), which is the correct direction for
-    * a budget gate.
-    */
-  private[operators] def bandPairStats(
-      banded: DataFrame, maxBucket: Int): DataFrame =
-    banded.groupBy("bk").agg(count(lit(1)).as("cnt"))
-      .withColumn("cand",
-        when(col("cnt") <= maxBucket, expr("cnt * (cnt - 1) div 2"))
-          .otherwise(col("cnt") - 1))
-
-  /** Total estimated candidate mass (driver scalar; see
-    * [[bandPairStats]]).
-    */
-  private[operators] def estimateBandPairs(
-      banded: DataFrame, maxBucket: Int): Long =
-    Option(bandPairStats(banded, maxBucket)
-      .agg(sum("cand")).first().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-
-  /** [[bandCandidatePairs]] with a pair budget. refuse=true: throw
-    * [[PairBudgetExceeded]] when the estimate exceeds `pairBudget`
-    * (naming the hottest buckets), else run in full. refuse=false:
-    * CAP — keep whole buckets in ascending (cand, band, key) order
-    * while the cumulative estimate stays within budget, drop the
-    * rest; the output is then a DOCUMENTED DETERMINISTIC PREFIX of
-    * the full candidate set (cheapest buckets first — exactly the
-    * buckets a constrained run can afford), oracle-replayable because
-    * the keep rule is pure integer arithmetic over the bucket stats.
-    * The keep rule runs over BUCKET STATS, never the corpus — and
-    * since the stats table itself is corpus-scale at 100 TB (one row
-    * per distinct band bucket), the cumulative sum runs as
-    * [[PrefixBudget.keepWithinBudget]]'s distributed prefix scan, not
-    * a single-partition window (r14).
-    */
-  private[operators] def bandCandidatePairsBudgeted(
-      banded: DataFrame,
-      maxBucket: Int,
-      pairBudget: Long,
-      refuse: Boolean,
-      what: String): DataFrame = {
-    require(pairBudget > 0, "pairBudget must be positive")
-    val stats = bandPairStats(banded, maxBucket)
-    if (refuse) {
-      // one stats frame: the estimate aggregates it directly (the r13
-      // rendering re-derived the groupBy via estimateBandPairs); the
-      // top-3 hottest report runs only on the refusal path
-      val est = Option(stats.agg(sum("cand")).first().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      if (est > pairBudget) {
-        val hot = stats.orderBy(col("cand").desc).limit(3).collect()
-          .map(r => s"${r.get(0)} cand=${r.get(2)}").toSeq
-        throw PairBudgetExceeded(est, pairBudget, what, hot)
-      }
-      bandCandidatePairs(banded, maxBucket)
-    } else {
-      val keep = PrefixBudget.keepWithinBudget(
-          stats, "cand", pairBudget,
-          Seq(col("cand"), col("bk.band"), col("bk.key")))
-        .select("bk")
-      // no broadcast hint: the kept-bucket list scales with distinct
-      // band keys (corpus-sized at 100 TB); the semi join shuffles on
-      // bk — the same key the candidate window partitions by — so AQE
-      // broadcasts it exactly when it fits
-      bandCandidatePairs(
-        banded.join(keep, Seq("bk"), "left_semi"), maxBucket)
-    }
-  }
-
   private[operators] def bandCandidatePairs(
       banded: DataFrame, // (id, bk)
       maxBucket: Int): DataFrame = {
@@ -778,6 +593,10 @@ object Dedup {
     * bandCandidatePairs). Jaccard is computed on the distinct
     * shingle-HASH sets (engine-replayable; equal to string-shingle
     * Jaccard modulo ~1e-9-probability hash collisions).
+    *
+    * `budget` ([[PairBudget]]) buckets candidates by band key (see
+    * [[bandPairStats]]); the estimate is one groupBy over the band
+    * table, never a pair.
     */
   def minhashNearDupsPoly(
       df: DataFrame,
@@ -787,7 +606,8 @@ object Dedup {
       k: Int = 64,
       bands: Int = 16,
       minJaccard: Double = 0.5,
-      maxBucket: Int = DefaultMaxBucket): DataFrame = {
+      maxBucket: Int = DefaultMaxBucket,
+      budget: PairBudget = PairBudget.Unlimited): DataFrame = {
     import graft.expressions.{MinHashSig, TextShingleHashes}
     val rowsPerBand = k / bands
     val sh = df.select(col(idCol).as("id"),
@@ -796,83 +616,10 @@ object Dedup {
     val banded = sh.select(col("id"),
       explode(lshBandKeysPoly(col("sig"), bands, rowsPerBand)).as("bk"))
     verifyJaccard(
-      bandCandidatePairs(banded, maxBucket),
+      bandCandidatePairs(
+        budgetBands(banded, maxBucket, budget, "minhashNearDupsPoly"),
+        maxBucket),
       sh.select(col("id"), col("hs").as("es")), minJaccard)
-  }
-
-  /** [[minhashNearDupsPoly]] under a pair budget (r13): identical
-    * sketch stack and cap, but the candidate stage runs through
-    * [[bandCandidatePairsBudgeted]] — refuse=true declines a run
-    * whose estimated candidate mass exceeds `pairBudget` (throwing
-    * [[PairBudgetExceeded]] with the hottest buckets named);
-    * refuse=false emits the deterministic cheapest-buckets-first
-    * prefix that fits the budget. The estimate is one groupBy over
-    * the band table — the pre-flight never materializes a pair.
-    */
-  def minhashNearDupsPolyBudgeted(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      pairBudget: Long,
-      refuse: Boolean = true,
-      n: Int = 3,
-      k: Int = 64,
-      bands: Int = 16,
-      minJaccard: Double = 0.5,
-      maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    import graft.expressions.{MinHashSig, TextShingleHashes}
-    val rowsPerBand = k / bands
-    val sh = df.select(col(idCol).as("id"),
-      array_distinct(TextShingleHashes(col(textCol), n)).as("hs"))
-      .withColumn("sig", MinHashSig.ofHashes(col("hs"), k))
-    val banded = sh.select(col("id"),
-      explode(lshBandKeysPoly(col("sig"), bands, rowsPerBand)).as("bk"))
-    verifyJaccard(
-      bandCandidatePairsBudgeted(banded, maxBucket, pairBudget, refuse,
-        "minhashNearDupsPolyBudgeted"),
-      sh.select(col("id"), col("hs").as("es")), minJaccard)
-  }
-
-  /** [[editDistanceNearDups]] under a pair budget (r13) — same
-    * budgeted candidate stage as [[minhashNearDupsPolyBudgeted]];
-    * the Jaccard gate and thresholded-Levenshtein verify run only on
-    * the affordable candidate prefix.
-    */
-  def editDistanceNearDupsBudgeted(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      pairBudget: Long,
-      refuse: Boolean = true,
-      maxDist: Int = 64,
-      jaccardFloor: Double = 0.4,
-      n: Int = 3,
-      k: Int = 64,
-      bands: Int = 16,
-      maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    import graft.expressions.{MinHashSig, TextShingleHashes}
-    val rowsPerBand = k / bands
-    val sh = df.select(col(idCol).as("id"),
-      array_distinct(TextShingleHashes(col(textCol), n)).as("hs"))
-      .withColumn("sig", MinHashSig.ofHashes(col("hs"), k))
-    val banded = sh.select(col("id"),
-      explode(lshBandKeysPoly(col("sig"), bands, rowsPerBand)).as("bk"))
-    val texts = df.select(col(idCol).as("id"), col(textCol).as("txt"))
-    val inter = size(array_intersect(col("hs_a"), col("hs_b")))
-    val union = size(col("hs_a")) + size(col("hs_b")) - inter
-    val gated = bandCandidatePairsBudgeted(banded, maxBucket, pairBudget,
-        refuse, "editDistanceNearDupsBudgeted")
-      .join(sh.select(col("id").as("id_a"), col("hs").as("hs_a")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("hs").as("hs_b")), Seq("id_b"))
-      .filter(inter.cast("double") / union.cast("double") >= jaccardFloor)
-      .select("id_a", "id_b")
-    gated
-      .join(texts.select(col("id").as("id_a"), col("txt").as("t_a")), Seq("id_a"))
-      .join(texts.select(col("id").as("id_b"), col("txt").as("t_b")), Seq("id_b"))
-      .withColumn("dist", when(col("t_a") === col("t_b"), 0)
-        .otherwise(levenshtein(col("t_a"), col("t_b"), maxDist)))
-      .filter(col("dist") =!= -1)
-      .select("id_a", "id_b", "dist")
   }
 
   /** [[minhashNearDupsPoly]] with the signature built by ONE-
@@ -930,6 +677,9 @@ object Dedup {
     * cross-corpus analog of [[bandCandidatePairs]]' star cap, equally
     * part of the operator's definition and replayed by the oracle.
     * Exact-Jaccard verify on the shingle-hash sets, as everywhere.
+    *
+    * `budget` ([[PairBudget]]) buckets candidates by band key (see
+    * [[crossBandPairStats]]).
     */
   def crossCorpusNearDups(
       dfA: DataFrame,
@@ -940,7 +690,8 @@ object Dedup {
       k: Int = 64,
       bands: Int = 16,
       minJaccard: Double = 0.5,
-      maxBucket: Int = DefaultMaxBucket): DataFrame = {
+      maxBucket: Int = DefaultMaxBucket,
+      budget: PairBudget = PairBudget.Unlimited): DataFrame = {
     import graft.expressions.{MinHashSig, TextShingleHashes}
     val rowsPerBand = k / bands
     def sketch(df: DataFrame) = df.select(
@@ -951,17 +702,11 @@ object Dedup {
     val sb = sketch(dfB)
     def banded(s: DataFrame) = s.select(col("id"),
       explode(lshBandKeysPoly(col("sig"), bands, rowsPerBand)).as("bk"))
-    crossJaccardVerify(
-      crossBandCandidatePairs(banded(sa), banded(sb), maxBucket),
-      sa, sb, minJaccard)
-  }
-
-  /** Exact-Jaccard verify of cross-side candidates against the two
-    * sketch tables — shared by the plain and budgeted faces.
-    */
-  private def crossJaccardVerify(cands: DataFrame, sa: DataFrame,
-      sb: DataFrame, minJaccard: Double): DataFrame =
-    cands
+    val (ba, bb) = (banded(sa), banded(sb))
+    val Seq(ka, kb) = PairBudget.restrict(budget,
+      crossBandPairStats(ba, bb, maxBucket), "crossCorpusNearDups",
+      Seq("bk"), Seq(col("cand"), col("bk.band"), col("bk.key")))(ba, bb)
+    crossBandCandidatePairs(ka, kb, maxBucket)
       .join(sa.select(col("id").as("id_a"), col("hs").as("hs_a")), Seq("id_a"))
       .join(sb.select(col("id").as("id_b"), col("hs").as("hs_b")), Seq("id_b"))
       .withColumn("inter", size(array_intersect(col("hs_a"), col("hs_b"))))
@@ -969,14 +714,16 @@ object Dedup {
         (size(col("hs_a")) + size(col("hs_b")) - col("inter")).cast("double"))
       .filter(col("jaccard") >= minJaccard)
       .select("id_a", "id_b", "jaccard")
+  }
 
-  /** Pre-flight per-bucket CROSS candidate mass under the
-    * total-occupancy cap: cool buckets (cnt_a + cnt_b ≤ maxBucket)
-    * contribute cnt_a·cnt_b, hot buckets their two stars
-    * (cnt_a + cnt_b − 1). Upper bound (cross-band duplicates collapse
-    * later); one groupBy per side, NO pair materialization.
+  /** Per-bucket CROSS candidate mass under the total-occupancy cap,
+    * the budget stats of [[crossCorpusNearDups]]: cool buckets
+    * (cnt_a + cnt_b ≤ maxBucket) contribute cnt_a·cnt_b, hot buckets
+    * their two stars (cnt_a + cnt_b − 1). Upper bound (cross-band
+    * duplicates collapse later); one groupBy per side, NO pair
+    * materialization. Under a cap both sides keep the same buckets.
     */
-  private[operators] def crossBandPairStats(
+  private def crossBandPairStats(
       bandedA: DataFrame, bandedB: DataFrame, maxBucket: Int): DataFrame =
     bandedA.groupBy("bk").agg(count(lit(1)).as("cnt_a"))
       .join(bandedB.groupBy("bk").agg(count(lit(1)).as("cnt_b")), Seq("bk"))
@@ -984,62 +731,6 @@ object Dedup {
         when(col("cnt_a") + col("cnt_b") <= maxBucket,
           col("cnt_a") * col("cnt_b"))
           .otherwise(col("cnt_a") + col("cnt_b") - 1))
-
-  /** [[crossCorpusNearDups]] under a pair budget (r14, judge ask #6):
-    * refuse=true declines when the cross-candidate estimate exceeds
-    * `pairBudget`; refuse=false keeps whole buckets cheapest-first
-    * (ascending (cand, band, key), [[PrefixBudget]]'s distributed
-    * prefix scan) and emits the pairs whose bucket survived.
-    */
-  def crossCorpusNearDupsBudgeted(
-      dfA: DataFrame,
-      dfB: DataFrame,
-      idCol: String,
-      textCol: String,
-      pairBudget: Long,
-      refuse: Boolean = true,
-      n: Int = 3,
-      k: Int = 64,
-      bands: Int = 16,
-      minJaccard: Double = 0.5,
-      maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    require(pairBudget > 0, "pairBudget must be positive")
-    import graft.expressions.{MinHashSig, TextShingleHashes}
-    val rowsPerBand = k / bands
-    def sketch(df: DataFrame) = df.select(
-      col(idCol).cast("long").as("id"),
-      array_distinct(TextShingleHashes(col(textCol), n)).as("hs"))
-      .withColumn("sig", MinHashSig.ofHashes(col("hs"), k))
-    val sa = sketch(dfA)
-    val sb = sketch(dfB)
-    def banded(s: DataFrame) = s.select(col("id"),
-      explode(lshBandKeysPoly(col("sig"), bands, rowsPerBand)).as("bk"))
-    val ba = banded(sa)
-    val bb = banded(sb)
-    val stats = crossBandPairStats(ba, bb, maxBucket)
-    if (refuse) {
-      val est = Option(stats.agg(sum("cand")).first().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      if (est > pairBudget) {
-        val hot = stats.orderBy(col("cand").desc).limit(3).collect()
-          .map(r => s"${r.get(0)} cand=${r.get(3)}").toSeq
-        throw PairBudgetExceeded(est, pairBudget,
-          "crossCorpusNearDupsBudgeted", hot)
-      }
-      crossJaccardVerify(crossBandCandidatePairs(ba, bb, maxBucket),
-        sa, sb, minJaccard)
-    } else {
-      val keep = PrefixBudget.keepWithinBudget(
-          stats, "cand", pairBudget,
-          Seq(col("cand"), col("bk.band"), col("bk.key")))
-        .select("bk")
-      crossJaccardVerify(
-        crossBandCandidatePairs(
-          ba.join(keep, Seq("bk"), "left_semi"),
-          bb.join(keep, Seq("bk"), "left_semi"), maxBucket),
-        sa, sb, minJaccard)
-    }
-  }
 
   /** Cross-side band candidates: rows of `bandedA` (id, bk) pair with
     * rows of `bandedB` sharing a band key — never within a side. The
@@ -1078,6 +769,10 @@ object Dedup {
     * the cascade cut this operator 65 s → ~11 s. The thresholded
     * `levenshtein(a, b, maxDist)` also abandons any DP whose distance
     * provably exceeds the bound.
+    *
+    * `budget` ([[PairBudget]]) gates the candidate stage exactly as in
+    * [[minhashNearDupsPoly]]; the Jaccard gate and the Levenshtein
+    * verify run only on the pairs it lets through.
     */
   def editDistanceNearDups(
       df: DataFrame,
@@ -1088,7 +783,8 @@ object Dedup {
       n: Int = 3,
       k: Int = 64,
       bands: Int = 16,
-      maxBucket: Int = DefaultMaxBucket): DataFrame = {
+      maxBucket: Int = DefaultMaxBucket,
+      budget: PairBudget = PairBudget.Unlimited): DataFrame = {
     import graft.expressions.{MinHashSig, TextShingleHashes}
     val rowsPerBand = k / bands
     val sh = df.select(col(idCol).as("id"),
@@ -1103,7 +799,9 @@ object Dedup {
     // the shingle-hash arrays (needed for the Jaccard gate); the wide
     // text columns join in afterwards, for gate SURVIVORS only — on a
     // duplicate-heavy corpus that is orders of magnitude fewer rows
-    val gated = bandCandidatePairs(banded, maxBucket)
+    val gated = bandCandidatePairs(
+        budgetBands(banded, maxBucket, budget, "editDistanceNearDups"),
+        maxBucket)
       .join(sh.select(col("id").as("id_a"), col("hs").as("hs_a")), Seq("id_a"))
       .join(sh.select(col("id").as("id_b"), col("hs").as("hs_b")), Seq("id_b"))
       .filter(inter.cast("double") / union.cast("double") >= jaccardFloor)

@@ -82,6 +82,22 @@ object Geo {
     df.withColumn("cx", floorDiv(col(latCol).cast("long"), cell))
       .withColumn("cy", floorDiv(col(lonCol).cast("long"), cell))
 
+  /** The 3x3 cell-offset neighborhood, one struct (dx, dy) per cell. */
+  private def neighborhood: Seq[Column] =
+    for { dx <- -1 to 1; dy <- -1 to 1 }
+      yield struct(lit(dx.toLong).as("dx"), lit(dy.toLong).as("dy"))
+
+  /** (id, lat, lon, cx, cy) with coordinates range-checked and the
+    * home cell of side `radius`.
+    */
+  private def gridPoints(points: DataFrame, idCol: String, latCol: String,
+      lonCol: String, radius: Long): DataFrame =
+    withCell(
+      points.select(col(idCol).as("id"),
+        checkedCoord(col(latCol).cast("long"), latCol).as("lat"),
+        checkedCoord(col(lonCol).cast("long"), lonCol).as("lon")),
+      "lat", "lon", radius)
+
   /** All point pairs (id_a < id_b) within `radius`, with exact squared
     * distance. Each qualifying unordered pair is emitted EXACTLY once:
     * the lower-id member is found via its replicated 3x3 neighborhood
@@ -89,119 +105,54 @@ object Geo {
     * is unique, so no post-join distinct is needed — the dedup-free
     * variant of the grid join).
     *
+    * `budget` ([[PairBudget]]) buckets candidates by join cell (see
+    * [[radiusJoinCellStats]]): since every pair meets at exactly one
+    * join key, a capped output is the exact pair subset whose meeting
+    * cell survived.
+    *
     * Output: (id_a, id_b, dist2) with dist2 = dx*dx + dy*dy <= radius*radius.
     */
   def radiusJoin(points: DataFrame, idCol: String, latCol: String,
-      lonCol: String, radius: Long): DataFrame = {
+      lonCol: String, radius: Long,
+      budget: PairBudget = PairBudget.Unlimited): DataFrame = {
     requireRadius(radius)
-    val p = withCell(
-      points.select(col(idCol).as("id"),
-        checkedCoord(col(latCol).cast("long"), latCol).as("lat"),
-        checkedCoord(col(lonCol).cast("long"), lonCol).as("lon")),
-      "lat", "lon", radius)
-    val offsets = for { dx <- -1 to 1; dy <- -1 to 1 }
-      yield struct(lit(dx.toLong).as("dx"), lit(dy.toLong).as("dy"))
+    val p = gridPoints(points, idCol, latCol, lonCol, radius)
     val repl = p
-      .withColumn("o", explode(array(offsets: _*)))
+      .withColumn("o", explode(array(neighborhood: _*)))
       .select(col("id").as("id_a"), col("lat").as("lat_a"),
         col("lon").as("lon_a"),
         (col("cx") + col("o.dx")).as("jx"),
         (col("cy") + col("o.dy")).as("jy"))
     val home = p.select(col("id").as("id_b"), col("lat").as("lat_b"),
       col("lon").as("lon_b"), col("cx").as("jx"), col("cy").as("jy"))
+    val Seq(r, h) = PairBudget.restrict(budget, radiusJoinCellStats(p),
+      "radiusJoin", Seq("jx", "jy"),
+      Seq(col("cand"), col("jx"), col("jy")))(repl, home)
     val d2 = (col("lat_a") - col("lat_b")) * (col("lat_a") - col("lat_b")) +
       (col("lon_a") - col("lon_b")) * (col("lon_a") - col("lon_b"))
-    repl.join(home, Seq("jx", "jy"))
+    r.join(h, Seq("jx", "jy"))
       .filter(col("id_a") < col("id_b"))
       .withColumn("dist2", d2)
       .filter(col("dist2") <= lit(radius * radius))
       .select("id_a", "id_b", "dist2")
   }
 
-  /** Pre-flight per-join-cell candidate mass of [[radiusJoin]]: each
-    * unordered pair meets at exactly ONE join key (the higher id's
-    * home cell), so cand(jx, jy) = (Σ 3×3-neighborhood cell counts) ×
-    * (home cell count) bounds the join rows there. Cell-count
-    * metadata only — NO pair materialization.
+  /** Per-join-cell candidate mass of [[radiusJoin]] over its
+    * [[gridPoints]]: each unordered pair meets at exactly ONE join key
+    * (the higher id's home cell), so cand(jx, jy) = (Σ 3×3-neighborhood
+    * cell counts) × (home cell count) bounds the join rows there.
+    * Cell-count metadata only — NO pair materialization.
     */
-  private[operators] def radiusJoinCellStats(
-      points: DataFrame, idCol: String, latCol: String, lonCol: String,
-      radius: Long): DataFrame = {
-    requireRadius(radius)
-    val p = withCell(
-      points.select(col(idCol).as("id"),
-        checkedCoord(col(latCol).cast("long"), latCol).as("lat"),
-        checkedCoord(col(lonCol).cast("long"), lonCol).as("lon")),
-      "lat", "lon", radius)
+  private def radiusJoinCellStats(p: DataFrame): DataFrame = {
     val cnt = p.groupBy("cx", "cy").agg(count(lit(1)).as("n"))
-    val offsets = for { dx <- -1 to 1; dy <- -1 to 1 }
-      yield struct(lit(dx.toLong).as("dx"), lit(dy.toLong).as("dy"))
     val nbh = cnt
-      .withColumn("o", explode(array(offsets: _*)))
+      .withColumn("o", explode(array(neighborhood: _*)))
       .select((col("cx") + col("o.dx")).as("jx"),
         (col("cy") + col("o.dy")).as("jy"), col("n"))
       .groupBy("jx", "jy").agg(sum("n").as("n_nbh"))
     nbh.join(cnt.select(col("cx").as("jx"), col("cy").as("jy"),
         col("n").as("n_home")), Seq("jx", "jy"))
       .withColumn("cand", col("n_nbh") * col("n_home"))
-  }
-
-  /** [[radiusJoin]] under a pair budget (r14, judge ask #6 — the
-    * spatial face of [[graft.operators.Dedup.PairBudgetExceeded]]):
-    * refuse=true declines a run whose grid-candidate estimate exceeds
-    * `pairBudget` (naming the densest join cells — exactly the
-    * fixed-box-density regime the sf10 ladder measured at ×100);
-    * refuse=false keeps whole join CELLS cheapest-first (ascending
-    * (cand, jx, jy), [[PrefixBudget]]'s distributed prefix scan):
-    * since every pair meets at exactly one join key, the capped
-    * output is the exact pair subset whose meeting cell survived.
-    */
-  def radiusJoinBudgeted(
-      points: DataFrame, idCol: String, latCol: String, lonCol: String,
-      radius: Long, pairBudget: Long,
-      refuse: Boolean = true): DataFrame = {
-    require(pairBudget > 0, "pairBudget must be positive")
-    val stats = radiusJoinCellStats(points, idCol, latCol, lonCol, radius)
-    if (refuse) {
-      val est = Option(stats.agg(sum("cand")).first().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      if (est > pairBudget) {
-        val hot = stats.orderBy(col("cand").desc).limit(3).collect()
-          .map(r => s"cell=(${r.get(0)},${r.get(1)}) cand=${r.get(4)}").toSeq
-        throw graft.operators.Dedup.PairBudgetExceeded(
-          est, pairBudget, "radiusJoinBudgeted", hot)
-      }
-      radiusJoin(points, idCol, latCol, lonCol, radius)
-    } else {
-      val keep = PrefixBudget.keepWithinBudget(
-          stats, "cand", pairBudget,
-          Seq(col("cand"), col("jx"), col("jy")))
-        .select("jx", "jy")
-      val p = withCell(
-        points.select(col(idCol).as("id"),
-          checkedCoord(col(latCol).cast("long"), latCol).as("lat"),
-          checkedCoord(col(lonCol).cast("long"), lonCol).as("lon")),
-        "lat", "lon", radius)
-      val offsets = for { dx <- -1 to 1; dy <- -1 to 1 }
-        yield struct(lit(dx.toLong).as("dx"), lit(dy.toLong).as("dy"))
-      val repl = p
-        .withColumn("o", explode(array(offsets: _*)))
-        .select(col("id").as("id_a"), col("lat").as("lat_a"),
-          col("lon").as("lon_a"),
-          (col("cx") + col("o.dx")).as("jx"),
-          (col("cy") + col("o.dy")).as("jy"))
-        .join(keep, Seq("jx", "jy"), "left_semi")
-      val home = p.select(col("id").as("id_b"), col("lat").as("lat_b"),
-          col("lon").as("lon_b"), col("cx").as("jx"), col("cy").as("jy"))
-        .join(keep, Seq("jx", "jy"), "left_semi")
-      val d2 = (col("lat_a") - col("lat_b")) * (col("lat_a") - col("lat_b")) +
-        (col("lon_a") - col("lon_b")) * (col("lon_a") - col("lon_b"))
-      repl.join(home, Seq("jx", "jy"))
-        .filter(col("id_a") < col("id_b"))
-        .withColumn("dist2", d2)
-        .filter(col("dist2") <= lit(radius * radius))
-        .select("id_a", "id_b", "dist2")
-    }
   }
 
   /** Nearest-site assignment within `radius`: for each query point, the
@@ -259,10 +210,8 @@ object Geo {
         checkedCoord(col(latCol).cast("long"), latCol).as("qlat"),
         checkedCoord(col(lonCol).cast("long"), lonCol).as("qlon")),
       "qlat", "qlon", radius)
-    val offsets = for { dx <- -1 to 1; dy <- -1 to 1 }
-      yield struct(lit(dx.toLong).as("dx"), lit(dy.toLong).as("dy"))
     val repl = q0
-      .withColumn("o", explode(array(offsets: _*)))
+      .withColumn("o", explode(array(neighborhood: _*)))
       .select(col("qid"), col("qlat"), col("qlon"),
         (col("cx") + col("o.dx")).as("jx"),
         (col("cy") + col("o.dy")).as("jy"))

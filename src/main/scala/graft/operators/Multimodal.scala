@@ -379,6 +379,11 @@ object Multimodal {
     * emit nothing. Measured: the string-keyed unsampled rendering
     * ran 15.5 s at sf0.1; this one ~3 s on the identical pair set
     * at minJaccard 0.5.
+    *
+    * `budget` ([[PairBudget]]) buckets candidates by
+    * shingle hash, cand_g = C(f_g, 2) over the frequency-capped
+    * postings. Under a cap a pair survives iff a kept shingle still
+    * links it, and its `inter` then counts kept shingles only.
     */
   def binaryNearDups(
       df: DataFrame,
@@ -387,58 +392,29 @@ object Multimodal {
       w: Int = 7,
       minJaccard: Double = 0.5,
       maxShingleFreq: Int = 200,
-      sampleMod: Int = 4): DataFrame = {
+      sampleMod: Int = 4,
+      budget: PairBudget = PairBudget.Unlimited): DataFrame = {
     // no-modulus base-257 Horner bound (injective on byte windows —
     // see BinarySketchKernels doc): max hash = 255·(257^w − 1)/256,
     // under 2^63 through w = 7 (≈7.4e16)
     require(w >= 2 && w <= 7,
       s"w must be in [2, 7] (base-257 exact-long Horner bound), got $w")
-    binaryNearDupsFrom(
-      binaryRarePostings(df, idCol, payloadCol, w, maxShingleFreq,
-        sampleMod),
-      minJaccard)
-  }
-
-  /** [[binaryNearDups]] under a pair budget (r14, judge ask #6 — the
-    * [[graft.operators.Dedup.PairBudgetExceeded]] philosophy on the
-    * byte-shingle posting join): the estimate is Σ_g C(f_g, 2) over
-    * the frequency-capped postings; refuse=true declines, refuse=false
-    * keeps whole shingle hashes cheapest-first (ascending (cand, g),
-    * PrefixBudget's distributed scan) — a pair survives iff a kept
-    * shingle still links it (its `inter` then counts kept shingles
-    * only, the documented capped contract).
-    */
-  def binaryNearDupsBudgeted(
-      df: DataFrame,
-      idCol: String,
-      payloadCol: String,
-      pairBudget: Long,
-      refuse: Boolean = true,
-      w: Int = 7,
-      minJaccard: Double = 0.5,
-      maxShingleFreq: Int = 200,
-      sampleMod: Int = 4): DataFrame = {
-    require(pairBudget > 0, "pairBudget must be positive")
-    import graft.operators.{Dedup, PrefixBudget}
     val rare = binaryRarePostings(df, idCol, payloadCol, w,
       maxShingleFreq, sampleMod)
-    val stats = rare.groupBy("g").agg(count(lit(1)).as("f"))
-      .withColumn("cand", expr("f * (f - 1) div 2"))
-    if (refuse) {
-      val est = Option(stats.agg(sum("cand")).first().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      if (est > pairBudget) {
-        val hot = stats.orderBy(col("cand").desc).limit(3).collect()
-          .map(r => s"g=${r.get(0)} cand=${r.get(2)}").toSeq
-        throw Dedup.PairBudgetExceeded(est, pairBudget,
-          "binaryNearDupsBudgeted", hot)
-      }
-      binaryNearDupsFrom(rare, minJaccard)
-    } else {
-      val keep = PrefixBudget.keepWithinBudget(
-        stats, "cand", pairBudget, Seq(col("cand"), col("g"))).select("g")
-      binaryNearDupsFrom(rare.join(keep, Seq("g"), "left_semi"), minJaccard)
-    }
+    val kept = PairBudget.restrict(budget,
+      rare.groupBy("g").agg(count(lit(1)).as("f"))
+        .withColumn("cand", expr("f * (f - 1) div 2")),
+      "binaryNearDups", Seq("g"), Seq(col("cand"), col("g")))(rare).head
+    val a = kept.select(col("id").as("id_a"), col("sz").as("sz_a"), col("g"))
+    val b = kept.select(col("id").as("id_b"), col("sz").as("sz_b"), col("g"))
+    a.join(b, Seq("g"))
+      .filter(col("id_a") < col("id_b"))
+      .groupBy("id_a", "id_b", "sz_a", "sz_b")
+      .agg(count(lit(1)).as("inter"))
+      .withColumn("jaccard", col("inter").cast("double")
+        / (col("sz_a") + col("sz_b") - col("inter")).cast("double"))
+      .filter(col("jaccard") >= minJaccard)
+      .select("id_a", "id_b", "jaccard")
   }
 
   /** Frequency-capped byte-shingle postings (id, sz, g). */
@@ -455,23 +431,6 @@ object Multimodal {
       .withColumn("f", count(lit(1)).over(w2))
       .filter(col("f") <= maxShingleFreq)
       .drop("f")
-  }
-
-  /** Posting self-join + Jaccard verify over a (possibly
-    * budget-filtered) rare-posting table.
-    */
-  private def binaryNearDupsFrom(
-      rare: DataFrame, minJaccard: Double): DataFrame = {
-    val a = rare.select(col("id").as("id_a"), col("sz").as("sz_a"), col("g"))
-    val b = rare.select(col("id").as("id_b"), col("sz").as("sz_b"), col("g"))
-    a.join(b, Seq("g"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b", "sz_a", "sz_b")
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard", col("inter").cast("double")
-        / (col("sz_a") + col("sz_b") - col("inter")).cast("double"))
-      .filter(col("jaccard") >= minJaccard)
-      .select("id_a", "id_b", "jaccard")
   }
 
   /** Content-defined chunk table over opaque payloads — the

@@ -74,19 +74,25 @@ object RangeJoin {
     * this rendering and the direct inequality join (they stay
     * value-identical either way), so filter empties out first if the
     * source can produce them.
+    *
+    * `budget` ([[PairBudget]]) buckets candidates by overlap bucket
+    * (see [[intervalOverlapPairStats]]); under a cap a pair survives
+    * iff its canonical meeting bucket was kept, replayable as plain
+    * SQL (inequality join + canonical-bucket membership).
     */
   def intervalOverlap(
       left: DataFrame,
       right: DataFrame,
       s1: String, e1: String,
       s2: String, e2: String,
-      bucket: Long): DataFrame = {
+      bucket: Long,
+      budget: PairBudget = PairBudget.Unlimited): DataFrame = {
     require(bucket > 0, "bucket width must be positive")
-    def buckets(s: String, e: String) =
-      explode(sequence(
-        floorDiv(col(s), bucket), floorDiv(col(e) - 1, bucket)))
-    val l = left.withColumn("__bkt", buckets(s1, e1))
-    val r = right.withColumn("__bkt", buckets(s2, e2))
+    val Seq(l, r) = PairBudget.restrict(budget,
+      intervalOverlapPairStats(left, right, s1, e1, s2, e2, bucket),
+      "intervalOverlap", Seq("__bkt"), Seq(col("cand"), col("__bkt")))(
+      left.withColumn("__bkt", overlapBuckets(s1, e1, bucket)),
+      right.withColumn("__bkt", overlapBuckets(s2, e2, bucket)))
     l.join(r, Seq("__bkt"))
       .filter(col(s1) < col(e2) && col(s2) < col(e1))
       .filter(col("__bkt") ===
@@ -94,7 +100,7 @@ object RangeJoin {
       .drop("__bkt")
   }
 
-  /** Pre-flight pair mass of [[intervalOverlap]]: per overlap bucket,
+  /** Budget stats of [[intervalOverlap]]: per overlap bucket,
     * cand = |left rows exploding there| × |right rows exploding
     * there| — an upper bound on joined rows at that bucket (the
     * canonical-meeting filter only removes). One groupBy per side +
@@ -106,62 +112,17 @@ object RangeJoin {
       bucket: Long): DataFrame = {
     require(bucket > 0, "bucket width must be positive")
     def counts(df: DataFrame, s: String, e: String, cn: String) =
-      df.withColumn("__bkt", explode(sequence(
-          floorDiv(col(s), bucket), floorDiv(col(e) - 1, bucket))))
+      df.withColumn("__bkt", overlapBuckets(s, e, bucket))
         .groupBy("__bkt").agg(count(lit(1)).as(cn))
     counts(left, s1, e1, "nl")
       .join(counts(right, s2, e2, "nr"), Seq("__bkt"))
       .withColumn("cand", col("nl") * col("nr"))
   }
 
-  /** [[intervalOverlap]] under a pair budget (r13, the minhash
-    * [[graft.operators.Dedup.PairBudgetExceeded]] philosophy).
-    * refuse=true: decline the run when Σcand exceeds `pairBudget`.
-    * refuse=false: CAP — keep whole buckets in ascending
-    * (cand, bucket-id) order while the cumulative estimate fits; the
-    * output is then exactly the pairs whose canonical meeting bucket
-    * survived — a documented deterministic prefix of the full join,
-    * replayable as plain SQL (inequality join + canonical-bucket
-    * membership). The keep rule runs over BUCKET STATS only, and —
-    * because the stats table grows with distinct overlap buckets —
-    * as [[graft.operators.PrefixBudget.keepWithinBudget]]'s
-    * distributed prefix scan, not a single-partition window (r14).
-    */
-  def intervalOverlapBudgeted(
-      left: DataFrame, right: DataFrame,
-      s1: String, e1: String, s2: String, e2: String,
-      bucket: Long, pairBudget: Long,
-      refuse: Boolean = true): DataFrame = {
-    require(pairBudget > 0, "pairBudget must be positive")
-    val stats = intervalOverlapPairStats(left, right, s1, e1, s2, e2, bucket)
-    if (refuse) {
-      val est = Option(stats.agg(sum("cand")).first().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      if (est > pairBudget) {
-        val hot = stats.orderBy(col("cand").desc).limit(3).collect()
-          .map(r => s"bkt=${r.get(0)} cand=${r.get(3)}").toSeq
-        throw graft.operators.Dedup.PairBudgetExceeded(
-          est, pairBudget, "intervalOverlapBudgeted", hot)
-      }
-      intervalOverlap(left, right, s1, e1, s2, e2, bucket)
-    } else {
-      val keep = PrefixBudget.keepWithinBudget(
-          stats, "cand", pairBudget, Seq(col("cand"), col("__bkt")))
-        .select("__bkt")
-      // same plan as intervalOverlap with both explosions semi-joined
-      // to the kept buckets; a pair survives iff its CANONICAL bucket
-      // was kept (the meeting-bucket filter runs unchanged)
-      def side(df: DataFrame, s: String, e: String) =
-        df.withColumn("__bkt", explode(sequence(
-            floorDiv(col(s), bucket), floorDiv(col(e) - 1, bucket))))
-          .join(keep, Seq("__bkt"), "left_semi")
-      side(left, s1, e1).join(side(right, s2, e2), Seq("__bkt"))
-        .filter(col(s1) < col(e2) && col(s2) < col(e1))
-        .filter(col("__bkt") ===
-          floorDiv(greatest(col(s1), col(s2)), bucket))
-        .drop("__bkt")
-    }
-  }
+  /** One row per `bucket`-wide bucket the interval [s, e) touches. */
+  private def overlapBuckets(s: String, e: String, bucket: Long): Column =
+    explode(sequence(
+      floorDiv(col(s), bucket), floorDiv(col(e) - 1, bucket)))
 
   private def floorDiv(c: Column, w: Long): Column =
     floor(c / lit(w)).cast("long")

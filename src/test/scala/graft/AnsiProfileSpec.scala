@@ -61,7 +61,7 @@ class AnsiProfileSpec extends SparkSpec {
   private def canon(df: DataFrame): Seq[String] = {
     val cols = df.columns.sorted
     df.select(cols.head, cols.tail: _*).collect()
-      .map(_.toSeq.map(String.valueOf).mkString(""))
+      .map(_.toSeq.map(String.valueOf).mkString("\u0000"))
       .sorted.toSeq
   }
 

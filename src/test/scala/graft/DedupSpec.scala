@@ -478,9 +478,8 @@ class DedupSpec extends SparkSpec {
       minCos2Ppm = 562501L).count() == 0L)
   }
 
-  test("allPairsCosine verify-path auto-select: posting-only, " +
-      "array-only, and mixed cutoffs are pair-identical on a fixture " +
-      "spanning the cutoff; histogram counts C(prefix_postings, 2)") {
+  test("allPairsCosine posting verify on a fixture of short, medium " +
+      "and long documents; histogram counts C(prefix_postings, 2)") {
     def doc(id: Long, toks: Seq[String]) = (id, toks.mkString(" "))
     val docs = (
       // 4 short near-dups: 10 shared + 1 unique token each
@@ -490,29 +489,19 @@ class DedupSpec extends SparkSpec {
         doc(10L, (0 until 100).map(j => s"m$j")),
         doc(11L, (0 until 99).map(j => s"m$j") :+ "mx"),
         // 150-token doc that is a SUBSET of the 240-token docs: pairs
-        // STRADDLE the mixed cutoff (one side 150 ≤ 200 < 240 other)
+        // of unequal sizes (150 vs 240)
         doc(12L, (0 until 150).map(j => s"L$j")),
         doc(20L, (0 until 240).map(j => s"L$j")),
         doc(21L, (0 until 239).map(j => s"L$j") :+ "Ly"))
     ).toDF("doc_id", "text")
     val t2 = 490000L // t = 0.7
-    def pairs(cutoff: Long) =
-      Dedup.allPairsCosine(docs, "doc_id", "text", t2, cutoff)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) ->
-          (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
-    val arrayOnly = pairs(Long.MaxValue)
-    val postingOnly = pairs(0L)
-    val mixed = pairs(200L)
-    assert(arrayOnly == postingOnly, "array vs posting verify differ")
-    assert(arrayOnly == mixed, "mixed cutoff changed the output")
+    val got = Dedup.allPairsCosine(docs, "doc_id", "text", t2)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) ->
+        (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
     // expected: C(4,2)=6 short + 1 medium + C(3,2)=3 long-family
-    assert(arrayOnly.size == 10, s"got ${arrayOnly.keySet.toSeq.sorted}")
-    // the mixed run genuinely exercised BOTH paths
-    val overCut = arrayOnly.count { case (_, (a, b, _, _)) =>
-      math.max(a, b) > 200L }
-    assert(overCut == 3 && arrayOnly.size - overCut == 7)
-    // straddling pair is present with the exact intersection
-    assert(arrayOnly((12L, 20L))._3 == 150L)
+    assert(got.size == 10, s"got ${got.keySet.toSeq.sorted}")
+    // the unequal-size pair is present with the exact intersection
+    assert(got((12L, 20L))._3 == 150L)
 
     // histogram: every row's cand_pairs == C(prefix_postings, 2), and
     // every emitted near-dup pair is covered by at least one prefix
@@ -526,7 +515,7 @@ class DedupSpec extends SparkSpec {
       assert(r.getLong(1) >= pp, "df must bound prefix_postings")
     }
     val budget = hist.map(_.getLong(3)).sum
-    assert(budget >= arrayOnly.size,
-      s"token pair budget $budget < ${arrayOnly.size} emitted pairs")
+    assert(budget >= got.size,
+      s"token pair budget $budget < ${got.size} emitted pairs")
   }
 }

@@ -488,7 +488,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val df = graft.operators.Dedup.allPairsCosine(
       Tables.documents(spark, Sf001).filter(col("doc_id") < 300),
-      "doc_id", "text", minCos2Ppm = 902500L) // default = posting path
+      "doc_id", "text", minCos2Ppm = 902500L)
     val p = df.queryExecution
       .explainString(ExplainMode.fromString("formatted"))
     assert(p.contains("HashAggregate"), p.take(2000))
