@@ -103,7 +103,47 @@ object TrafficModel {
   def save(model: PipelineModel, path: String): Unit =
     model.write.overwrite().save(path)
 
-  def load(path: String): PipelineModel = PipelineModel.load(path)
+  private val loaded =
+    scala.collection.concurrent.TrieMap.empty[String, (Seq[String], PipelineModel)]
+
+  /** K4/S7: the saved model at `path`, loaded once and reused. The
+    * serving DAG scores with the same saved model every cycle, and a
+    * `PipelineModel.load` costs about nine Spark jobs (metadata per
+    * stage, the forest's node table). The entry is keyed on a
+    * driver-side fingerprint of the saved files (relative names,
+    * lengths, modification times; one listing per directory, no Spark
+    * job), so a model re-saved at the same path is loaded again. One
+    * entry per path.
+    */
+  def load(path: String): PipelineModel = {
+    val (key, fp) = savedFiles(path)
+    loaded.get(key) match {
+      case Some((`fp`, model)) => model
+      case _ =>
+        val model = PipelineModel.load(path)
+        loaded.put(key, (fp, model))
+        model
+    }
+  }
+
+  /** (qualified path, sorted "name:length:mtime" of every file under
+    * it). Plain `listStatus` calls: `listFiles` would build located
+    * statuses, which on the local file system load each file's
+    * permissions with a shell call.
+    */
+  private def savedFiles(path: String): (String, Seq[String]) = {
+    import org.apache.hadoop.fs.Path
+    val conf = org.apache.spark.sql.SparkSession.active
+      .sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val key = fs.makeQualified(root).toString
+    def walk(dir: Path): Seq[String] = fs.listStatus(dir).toSeq.flatMap { f =>
+      if (f.isDirectory) walk(f.getPath)
+      else Seq(s"${f.getPath.toString.stripPrefix(key)}:${f.getLen}:${f.getModificationTime}")
+    }
+    (key, walk(root).sorted)
+  }
 
   /** Hyperparameter search: k-fold cross-validated depth selection
     * for the decision tree — the distributed rendering of the

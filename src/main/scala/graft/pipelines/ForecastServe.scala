@@ -1,7 +1,9 @@
 package graft.pipelines
 
+import scala.concurrent.ExecutionContext
+
 import org.apache.spark.ml.PipelineModel
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
@@ -44,17 +46,43 @@ object ForecastServe {
     * the `+01:00` offset and `.hour` is the local hour
     * (dags/utils.py:191,240), so `hour()` of the UTC instant would be
     * off by the offset.
+    *
+    * The instant is parsed with [[IsoOffsetDateTime]], so ISO-8601
+    * strings with or without seconds and fractions parse alike. A
+    * string that still does not parse gives NULL (never an error,
+    * ANSI or not) and its row is dropped, so it cannot become a
+    * null-keyed row; the dropped count goes to stderr once the first
+    * query over the frame has run (an observed metric, no job of its
+    * own).
     */
-  def parseForecastFrame(raw: DataFrame): DataFrame =
-    raw.filter(col("DateTime").isNotNull).select(
-      to_timestamp(col("DateTime")).as("DateTime"), // ISO8601 with offset
-      to_date(substring(col("DateTime"), 1, 10)).as("LocalDate"),
-      substring(col("DateTime"), 12, 2).cast("int").as("LocalHour"),
-      ScalarOps.normalizeTemp(
-        col("Temperature.Value"), col("Temperature.Unit"))
-        .as("Temperature"), // F6: F→C only when Unit='F'
-      col("Wind.Speed.Value").cast("int").as("WindSpeed"), // F12
-      col("HasPrecipitation").as("Precipitation")) // F11
+  def parseForecastFrame(raw: DataFrame): DataFrame = {
+    val unparsed = Observation()
+    unparsed.future.foreach { r =>
+      val n = r.getLong(0)
+      if (n > 0)
+        Console.err.println(
+          s"[serve] dropped $n forecast row(s) whose DateTime does not parse")
+    }(ExecutionContext.parasitic)
+    // the local components are read only from rows whose instant
+    // parsed, so they never see a malformed string (ANSI casts throw)
+    raw.filter(col("DateTime").isNotNull)
+      .withColumn("__instant",
+        try_to_timestamp(col("DateTime"), lit(IsoOffsetDateTime)))
+      .observe(unparsed, count(when(col("__instant").isNull, 1)))
+      .filter(col("__instant").isNotNull)
+      .select(
+        col("__instant").as("DateTime"), // UTC instant of the offset time
+        to_date(substring(col("DateTime"), 1, 10)).as("LocalDate"),
+        substring(col("DateTime"), 12, 2).cast("int").as("LocalHour"),
+        ScalarOps.normalizeTemp(
+          col("Temperature.Value"), col("Temperature.Unit"))
+          .as("Temperature"), // F6: F→C only when Unit='F'
+        col("Wind.Speed.Value").cast("int").as("WindSpeed"), // F12
+        col("HasPrecipitation").as("Precipitation")) // F11
+  }
+
+  /** ISO-8601 date-time with offset; seconds and milliseconds optional. */
+  private val IsoOffsetDateTime = "yyyy-MM-dd'T'HH:mm[:ss][.SSS]XXX"
 
   /** dags/utils.py:236-245: featureize the forecast rows for scoring
     * (same 8-feature shape as training; F9 weekday shim; holiday set
@@ -84,7 +112,11 @@ object ForecastServe {
   /** One full DAG run: create tables → weather append (K2) → predict →
     * traffic append with FK resolution (K3). Returns (weather rows
     * appended, traffic rows appended); a re-run with the same payload
-    * appends (0, 0) — ON CONFLICT parity.
+    * appends (0, 0) — ON CONFLICT parity. The forecast is parsed once
+    * and cached for both appends, the model comes from
+    * [[TrafficModel.load]]'s per-path cache (loaded from disk only when
+    * the saved files changed), and the forest scores once, inside the
+    * traffic append.
     */
   def run(
       s: SparkSession,
@@ -92,17 +124,18 @@ object ForecastServe {
       modelPath: String,
       warehouse: String): (Long, Long) = {
     val forecast = parseForecast(s, jsonPath).cache() // fetch once, feed both
-    StarSchemaSink.createTables(s, warehouse)
+    try {
+      StarSchemaSink.createTables(s, warehouse)
 
-    val nWeather = StarSchemaSink.idempotentAppend(
-      s, warehouse, "weather",
-      forecast.select("DateTime", "WindSpeed", "Temperature", "Precipitation"),
-      naturalKeys = Seq("DateTime"))
+      val nWeather = StarSchemaSink.idempotentAppend(
+        s, warehouse, "weather",
+        forecast.select("DateTime", "WindSpeed", "Temperature", "Precipitation"),
+        naturalKeys = Seq("DateTime"))
 
-    val model = TrafficModel.load(modelPath)
-    val preds = score(model, featureize(forecast))
-    val nTraffic = StarSchemaSink.appendTraffic(s, warehouse, preds)
-    forecast.unpersist()
-    (nWeather, nTraffic)
+      val model = TrafficModel.load(modelPath)
+      val preds = score(model, featureize(forecast))
+      val nTraffic = StarSchemaSink.appendTraffic(s, warehouse, preds)
+      (nWeather, nTraffic)
+    } finally forecast.unpersist()
   }
 }

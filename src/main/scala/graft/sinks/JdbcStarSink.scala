@@ -16,9 +16,9 @@ import graft.sources.Jdbc
   *
   * Scale shape: the anti-join scans only the natural-key PROJECTION
   * of the remote table (pushed down — the wire carries keys, not
-  * rows), the id high-water mark is one remote MAX, and the append is
-  * batched inserts. The FK resolve broadcasts the weather dimension
-  * exactly like the parquet sink.
+  * rows), the id high-water mark is one top-1 over the id column, and
+  * the append is batched inserts. The FK resolve broadcasts the
+  * weather dimension exactly like the parquet sink.
   */
 object JdbcStarSink {
 
@@ -72,10 +72,9 @@ object JdbcStarSink {
     val existing = Jdbc.read(s, url, table)
     val fresh = StarSchemaSink.antiJoinExisting(
       batch, Some(existing), naturalKeys, rowKeys)
-    val maxId = Option(existing.agg(max("id")).first().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
     val orderKeys = naturalKeys ++ rowKeys.filterNot(naturalKeys.contains)
-    StarSchemaSink.appendWithIds(s, fresh, orderKeys, maxId) { withIds =>
+    StarSchemaSink.appendWithIds(
+        fresh, orderKeys, StarSchemaSink.maxId(existing)) { withIds =>
       Jdbc.append(
         withIds.select(existing.columns.map(col).toIndexedSeq: _*),
         url, table, batchSize)
@@ -97,10 +96,11 @@ object JdbcStarSink {
   ): Long = {
     val weatherDim = Jdbc.read(s, url, "weather")
       .select(col("id").as("date_id"), col("DateTime"))
-    val resolved = StarSchemaSink.resolveTraffic(
-      predictions, weatherDim, "jdbc sink")
-    idempotentAppend(s, url, "traffic", resolved, Seq("date_id"),
-      rowKeys = Seq("DateTime"))
+    StarSchemaSink.withResolvedTraffic(predictions, weatherDim, "jdbc sink") {
+      resolved =>
+        idempotentAppend(s, url, "traffic", resolved, Seq("date_id"),
+          rowKeys = Seq("DateTime"))
+    }
   }
 
   def readTable(s: SparkSession, url: String, name: String): DataFrame =

@@ -1,8 +1,10 @@
 package graft.sinks
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The serving star schema (SURVEY §2 K1–K3; DDL at
   * dags/utils.py:98-124):
@@ -19,47 +21,52 @@ import org.apache.spark.sql.functions._
   * parquet tables; the same logic drives a JDBC sink unchanged.
   *
   * Surrogate ids: `max(existing) + position in natural-key order`,
-  * computed scale-safe — range-partition by the key, rank within each
-  * partition, add broadcast prefix-sum offsets (never a global
-  * single-partition window). Same dense SERIAL-like assignment at any
-  * batch size.
+  * computed scale-safe — range-partition by the key, sort within each
+  * partition, add the driver-side prefix sum of the partition sizes
+  * (never a global single-partition window). Same dense SERIAL-like
+  * assignment at any batch size.
+  *
+  * Table existence is a Hadoop FileSystem probe and the two tables are
+  * read with their declared schemas, so neither probing nor reading a
+  * table runs a Spark job of its own.
   */
 object StarSchemaSink {
 
-  private def tablePath(warehouse: String, name: String) = s"$warehouse/$name"
-
-  private def readIfExists(s: SparkSession, path: String): Option[DataFrame] =
-    try {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-      if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-        Some(s.read.parquet(path))
-      else None
-    } catch { case _: Throwable => None }
-
-  /** K1: create-if-not-exists — parquet tables materialize on first
-    * append; this just pre-creates empty frames for introspection.
-    */
-  def createTables(s: SparkSession, warehouse: String): Unit = {
-    import org.apache.spark.sql.types._
-    val weatherSchema = StructType(Seq(
+  /** Declared schemas of the two tables (dags/utils.py:98-124). */
+  private val Schemas: Map[String, StructType] = Map(
+    "weather" -> StructType(Seq(
       StructField("id", LongType, nullable = false),
       StructField("DateTime", TimestampType),
       StructField("WindSpeed", IntegerType),
       StructField("Temperature", IntegerType),
-      StructField("Precipitation", BooleanType)))
-    val trafficSchema = StructType(Seq(
+      StructField("Precipitation", BooleanType))),
+    "traffic" -> StructType(Seq(
       StructField("id", LongType, nullable = false),
       StructField("date_id", LongType),
-      StructField("Intensity", IntegerType)))
-    Seq("weather" -> weatherSchema, "traffic" -> trafficSchema).foreach {
-      case (name, schema) =>
-        val path = tablePath(warehouse, name)
-        if (readIfExists(s, path).isEmpty)
-          s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-            .write.mode(SaveMode.Overwrite).parquet(path)
-    }
+      StructField("Intensity", IntegerType))))
+
+  private def tablePath(warehouse: String, name: String) = s"$warehouse/$name"
+
+  private def exists(s: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
   }
+
+  private def readIfExists(
+      s: SparkSession, warehouse: String, name: String): Option[DataFrame] =
+    if (exists(s, tablePath(warehouse, name))) Some(readTable(s, warehouse, name))
+    else None
+
+  /** K1: create-if-not-exists — parquet tables materialize on first
+    * append; this just pre-creates empty frames for introspection.
+    */
+  def createTables(s: SparkSession, warehouse: String): Unit =
+    Schemas.foreach { case (name, schema) =>
+      val path = tablePath(warehouse, name)
+      if (!exists(s, path))
+        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+          .write.mode(SaveMode.Overwrite).parquet(path)
+    }
 
   /** K2 generalized: idempotent append with ON CONFLICT DO NOTHING
     * parity. `naturalKeys` mirror the DB uniqueness constraints
@@ -86,13 +93,10 @@ object StarSchemaSink {
       naturalKeys: Seq[String],
       rowKeys: Seq[String] = Nil): Long = {
     val path = tablePath(warehouse, table)
-    val existing = readIfExists(s, path)
+    val existing = readIfExists(s, warehouse, table)
     val fresh = antiJoinExisting(batch, existing, naturalKeys, rowKeys)
-    val maxId = existing
-      .flatMap(ex => Option(ex.agg(max("id")).first().get(0)))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
     val orderKeys = naturalKeys ++ rowKeys.filterNot(naturalKeys.contains)
-    appendWithIds(s, fresh, orderKeys, maxId) { withIds =>
+    appendWithIds(fresh, orderKeys, existing.map(maxId).getOrElse(0L)) { withIds =>
       val outCols = existing.map(_.columns.toSeq)
         .getOrElse("id" +: batch.columns.toSeq
           .filterNot(c => c == "id" ||
@@ -101,6 +105,14 @@ object StarSchemaSink {
         .write.mode(SaveMode.Append).parquet(path)
     }
   }
+
+  /** The table's largest id, 0 when it is empty (shared by both
+    * sinks). A top-1 is one job (each partition's best row, merged on
+    * the driver); `agg(max)` would add a shuffle stage.
+    */
+  private[sinks] def maxId(existing: DataFrame): Long =
+    existing.select("id").orderBy(col("id").desc).head(1)
+      .headOption.map(_.getLong(0)).getOrElse(0L)
 
   /** Within-batch dedup + anti-join against the existing table's
     * natural keys (the ON CONFLICT DO NOTHING half of K2, shared by
@@ -133,41 +145,53 @@ object StarSchemaSink {
     }
   }
 
+  /** Low 33 bits of `monotonically_increasing_id()`: the row's
+    * position within its partition (the upper bits hold the
+    * partition id).
+    */
+  private val RowInPartition = (1L << 33) - 1
+
   /** Dense-sequential surrogate-id assignment + write (the SERIAL
     * half of K2, shared by the parquet and JDBC sinks): range-
-    * partition by the natural key (partition i's keys all sort before
-    * partition i+1's), rank WITHIN each partition, and add the prefix
-    * sum of partition sizes — O(#partitions) driver rows, like any
-    * job's task stats, never a global single-partition window. The
-    * assignment is identical to a global row_number over the
-    * natural-key order, and the same plan loads a dimension of any
-    * size. Returns the appended row count; `write` runs only when
-    * there is something to append.
+    * partition by the order keys (partition i's keys all sort before
+    * partition i+1's) and sort within each partition; the rows are
+    * materialized once (a local checkpoint, released afterwards), so
+    * the size scan and the write read the same partitions. One job
+    * counts each partition's rows (O(#partitions) longs reach the
+    * driver, like any job's task stats), and a row's id is `maxId` +
+    * its partition's prefix offset (a literal array indexed by
+    * `spark_partition_id()`) + its position within the partition + 1.
+    * No shuffle beyond the range partition and never a global
+    * single-partition window; the assignment is identical to
+    * `maxId + row_number()` over the order keys, which must identify
+    * a row within `fresh`. Returns the appended row count; `write`
+    * runs only when there is something to append.
     */
   private[sinks] def appendWithIds(
-      s: SparkSession,
       fresh: DataFrame,
       orderKeys: Seq[String],
       maxId: Long)(write: DataFrame => Unit): Long = {
     val keyCols = orderKeys.map(col)
+    // a local checkpoint, not a cache: cached plans keep every range
+    // partition (AQE may not coalesce them), so a small batch would be
+    // written as one file per shuffle partition
     val ranged = fresh.repartitionByRange(keyCols: _*)
-      .withColumn("__pid", spark_partition_id()).cache()
-    val sizes = ranged.groupBy("__pid").agg(count(lit(1)).as("__c"))
-      .orderBy("__pid").collect()
-    val n = sizes.map(_.getLong(1)).sum
-    if (n > 0) {
-      var cum = maxId
-      val offsets = sizes.map { r =>
-        val o = (r.getInt(0), cum); cum += r.getLong(1); o
-      }.toSeq
-      val offDf = broadcast(s.createDataFrame(offsets).toDF("__pid", "__off"))
-      val wp = Window.partitionBy("__pid").orderBy(keyCols: _*)
-      write(ranged
-        .join(offDf, Seq("__pid"))
-        .withColumn("id", row_number().over(wp).cast("long") + col("__off")))
+      .sortWithinPartitions(keyCols: _*).localCheckpoint(eager = false)
+    try {
+      val sizes = ranged.rdd.mapPartitions(rows => Iterator(rows.size.toLong))
+        .collect()
+      val n = sizes.sum
+      if (n > 0) {
+        val offsets = sizes.scanLeft(maxId)(_ + _).init
+        write(ranged.withColumn("id",
+          typedLit(offsets).getItem(spark_partition_id()) +
+            (monotonically_increasing_id().bitwiseAND(RowInPartition) + 1)))
+      }
+      n
+    } finally ranged.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ => ()
     }
-    ranged.unpersist()
-    n
   }
 
   /** K3: FK-resolving traffic append — J2 left join replaces the
@@ -185,36 +209,46 @@ object StarSchemaSink {
       warehouse: String,
       predictions: DataFrame // columns: DateTime, Intensity
   ): Long = {
-    val weatherDim = s.read.parquet(tablePath(warehouse, "weather"))
+    val weatherDim = readTable(s, warehouse, "weather")
       .select(col("id").as("date_id"), col("DateTime"))
-    val resolved = resolveTraffic(predictions, weatherDim, "parquet sink")
-    idempotentAppend(s, warehouse, "traffic", resolved, Seq("date_id"),
-      rowKeys = Seq("DateTime"))
+    withResolvedTraffic(predictions, weatherDim, "parquet sink") { resolved =>
+      idempotentAppend(s, warehouse, "traffic", resolved, Seq("date_id"),
+        rowKeys = Seq("DateTime"))
+    }
   }
 
   /** Shared K3 resolve (parquet + JDBC sinks): dedup at the
-    * prediction grain, broadcast-join the dim, warn on unmatched.
-    * Keeps `DateTime` in the output — the sinks pass it as the
-    * `rowKeys` grain and it drops before the physical write.
+    * prediction grain, broadcast-join the dim, warn on unmatched, then
+    * `append` the resolved rows. They are cached for the duration, so
+    * the predictions are scored once for the unmatched count and the
+    * append together. Keeps `DateTime` in the output — the sinks pass
+    * it as the `rowKeys` grain and it drops before the physical write.
     */
-  private[sinks] def resolveTraffic(
+  private[sinks] def withResolvedTraffic(
       predictions: DataFrame,
       weatherDim: DataFrame,
-      who: String): DataFrame = {
+      who: String)(append: DataFrame => Long): Long = {
     val resolved = predictions
       .dropDuplicates("DateTime")
       .join(broadcast(weatherDim), Seq("DateTime"), "left")
       .select("date_id", "Intensity", "DateTime")
-    // Batch-sized count (predictions are serving batches, the join is
-    // broadcast) — a null FK is a data-quality signal worth a line.
-    val unmatched = resolved.filter(col("date_id").isNull).count()
-    if (unmatched > 0)
-      Console.err.println(
-        s"[sink] appendTraffic ($who): $unmatched prediction(s) have no " +
-          "weather row - inserting with null date_id (reference parity)")
-    resolved
+      .cache()
+    try {
+      // Batch-sized count (predictions are serving batches, the join is
+      // broadcast) — a null FK is a data-quality signal worth a line.
+      val unmatched = resolved.filter(col("date_id").isNull).count()
+      if (unmatched > 0)
+        Console.err.println(
+          s"[sink] appendTraffic ($who): $unmatched prediction(s) have no " +
+            "weather row - inserting with null date_id (reference parity)")
+      append(resolved)
+    } finally resolved.unpersist()
   }
 
+  /** A table of the star schema; the two declared tables are read with
+    * their declared schemas (no inference job).
+    */
   def readTable(s: SparkSession, warehouse: String, name: String): DataFrame =
-    s.read.parquet(tablePath(warehouse, name))
+    Schemas.get(name).fold(s.read)(s.read.schema)
+      .parquet(tablePath(warehouse, name))
 }

@@ -177,9 +177,9 @@ object Fuzz {
     }
     val st = StructType(Seq(sLong("k"), sLong("a")))
     val su = StructType(Seq(sLong("k"), sLong("b")))
-    // two INDEPENDENT draws (r13 ADVICE: the old identity .map on a
-    // second `side` call misleadingly suggested mirroring) — the hot
-    // 6-key domain still guarantees dense duplicate matches
+    // `side` is a def: t and u are two independent draws, not mirrors
+    // of each other; the hot 6-key domain still gives dense duplicate
+    // matches
     Built(
       Map("t" -> mkDf(spark, st, side()),
         "u" -> mkDf(spark, su, side())),

@@ -1,9 +1,16 @@
 package graft
 
+import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ml.TrafficModel
 import graft.pipelines.{ForecastServe, HistoricalTraining}
+import graft.sinks.StarSchemaSink
+import graft.sources.CsvSources
 import graft.streaming.ForecastStream
 
 /** End-to-end serving pipeline over the AccuWeather-shaped fixture
@@ -90,5 +97,146 @@ class ForecastServeSpec extends SparkSpec {
     ForecastStream.runAvailableNow(spark, landing, modelPath, wh, ckpt)
     val weather = graft.sinks.StarSchemaSink.readTable(spark, wh, "weather")
     assert(weather.count() == 18L) // 12 + 6 new, overlap deduped
+  }
+
+  /** One forecast record of the API's shape, at `dateTime`. */
+  private def record(dateTime: String, tempF: Double): String =
+    s"""{"DateTime": "$dateTime", "HasPrecipitation": false,
+       |"Temperature": {"Value": $tempF, "Unit": "F"},
+       |"Wind": {"Speed": {"Value": 12.0}}}""".stripMargin.replace("\n", " ")
+
+  /** The rows parseForecastFrame keeps from an in-memory payload, as
+    * (UTC instant, local hour, temperature) by temperature.
+    */
+  private def parseInMemory(): Seq[(Timestamp, Int, Int)] = {
+    import spark.implicits._
+    val raw = spark.read.schema(CsvSources.forecastSchema).json(Seq(
+      record("2024-03-01T07:00:00+01:00", 32.0),
+      record("2024-03-01T07:00:00Z", 41.0),
+      record("2024-03-01T07:00:00.000+01:00", 50.0),
+      record("2024-03-01T07:00+01:00", 59.0),
+      record("2024-03-01 garbage", 68.0)).toDS())
+    ForecastServe.parseForecastFrame(raw)
+      .select("DateTime", "LocalHour", "Temperature").collect()
+      .map(r => (r.getTimestamp(0), r.getInt(1), r.getInt(2)))
+      .sortBy(_._3).toSeq
+  }
+
+  private def checkParse(): Unit = {
+    val utc = (hhmm: String) => new Timestamp(
+      java.time.Instant.parse(s"2024-03-01T$hhmm:00Z").toEpochMilli)
+    assert(parseInMemory() == Seq(
+      (utc("06:00"), 7, 0), // with seconds and offset
+      (utc("07:00"), 7, 5), // Z
+      (utc("06:00"), 7, 10), // with milliseconds
+      (utc("06:00"), 7, 15))) // without seconds; the garbage row is gone
+  }
+
+  test("parseForecastFrame: ISO-8601 with and without seconds parses " +
+      "to the UTC instant; an unparseable DateTime drops its row") {
+    GraftSession.tune(spark)
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "false")
+    checkParse()
+  }
+
+  test("parseForecastFrame: the same rows under ANSI mode, without " +
+      "an error on the unparseable DateTime") {
+    sys.props(GraftSession.AnsiOverrideProp) = "true"
+    try {
+      GraftSession.tune(spark)
+      assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+      checkParse()
+    } finally {
+      sys.props.remove(GraftSession.AnsiOverrideProp)
+      GraftSession.tune(spark)
+    }
+  }
+
+  /** A small forest on a synthetic frame of the 8 features; `rising`
+    * picks whether Count rises or falls with the hour, so two models
+    * score the same forecast differently.
+    */
+  private def syntheticModel(rising: Boolean): org.apache.spark.ml.PipelineModel = {
+    val hourShare = col("Hour") / 23.0
+    val train = spark.range(2000).select(
+      (col("id") % 12 + 1).cast("int").as("Month"),
+      (col("id") % 28 + 1).cast("int").as("Day"),
+      (col("id") % 24).cast("int").as("Hour"),
+      (col("id") % 7).cast("int").as("DayofWeek"),
+      (col("id") % 50 === 0).as("isHoliday"),
+      (col("id") % 31).cast("int").as("Wind Speed"),
+      (col("id") % 35 - 5).cast("int").as("Temperature"),
+      (col("id") % 3 === 0).as("Precipitation"))
+      .withColumn("Count", if (rising) hourShare else lit(1.0) - hourShare)
+    TrafficModel.fit(TrafficModel.randomForest(numTrees = 5, maxDepth = 4), train)
+  }
+
+  private object Jobs extends SparkListener {
+    val started = new AtomicLong
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      started.incrementAndGet()
+  }
+
+  /** `body`'s result and the Spark jobs it started. */
+  private def countingJobs[T](body: => T): (T, Long) = {
+    org.apache.spark.GraftSparkAccess.drainListenerBus(spark.sparkContext)
+    val before = Jobs.started.get
+    val r = body
+    org.apache.spark.GraftSparkAccess.drainListenerBus(spark.sparkContext)
+    (r, Jobs.started.get - before)
+  }
+
+  private def assertDenseIds(t: DataFrame, n: Long): Unit =
+    assert(t.select("id").collect().map(_.getLong(0)).sorted.toSeq ==
+      (1L to n), t.select("id").collect().toSeq)
+
+  test("serving run without reference data: fresh (12, 12), replay " +
+      "(0, 0), overlap (6, 6), dense ids, at most 24 Spark jobs a cycle") {
+    val model = tmpDir("model-synth") + "/rf"
+    TrafficModel.save(syntheticModel(rising = true), model)
+    TrafficModel.load(model) // the first load reads the files; cycles reuse it
+    val wh = tmpDir("wh-synth")
+    spark.sparkContext.addSparkListener(Jobs)
+    val cycles = try Seq(fixture, fixture, fixtureOverlap)
+      .map(p => countingJobs(ForecastServe.run(spark, p, model, wh)))
+    finally spark.sparkContext.removeSparkListener(Jobs)
+    assert(cycles.map(_._1) == Seq((12L, 12L), (0L, 0L), (6L, 6L)))
+    val jobs = cycles.map(_._2)
+    assert(jobs.forall(_ <= 24L), s"Spark jobs per cycle: $jobs")
+
+    val weather = StarSchemaSink.readTable(spark, wh, "weather")
+    val traffic = StarSchemaSink.readTable(spark, wh, "traffic")
+    assertDenseIds(weather, 18L)
+    assertDenseIds(traffic, 18L)
+    // every traffic row resolves to its own weather row
+    assert(traffic.select("date_id").distinct()
+      .join(weather.select(col("id").as("date_id")), Seq("date_id"))
+      .count() == 18L)
+    // a small append writes one file: per table, the empty file of
+    // createTables plus one each from the fresh and the overlap cycle
+    for (t <- Seq("weather", "traffic")) {
+      val files = new java.io.File(s"$wh/$t").listFiles
+        .count(_.getName.endsWith(".parquet"))
+      assert(files == 3, s"$t: $files parquet files")
+    }
+  }
+
+  test("a model re-saved at the same path is loaded again") {
+    val model = tmpDir("model-resave") + "/rf"
+    def intensities(rising: Boolean): Seq[Int] = {
+      TrafficModel.save(syntheticModel(rising), model)
+      val wh = tmpDir("wh-resave")
+      assert(ForecastServe.run(spark, fixture, model, wh) == ((12L, 12L)))
+      StarSchemaSink.readTable(spark, wh, "traffic")
+        .orderBy("date_id").select("Intensity").collect().map(_.getInt(0)).toSeq
+    }
+    val rising = intensities(rising = true)
+    assert(TrafficModel.load(model) eq TrafficModel.load(model),
+      "an unchanged model is loaded once")
+    val falling = intensities(rising = false)
+    assert(rising != falling, s"$rising vs $falling")
+    // the fixture's local hours run 13..23, 0: a rising model scores
+    // the afternoon high, a falling one low
+    assert(rising.take(11).sum > falling.take(11).sum, s"$rising vs $falling")
   }
 }

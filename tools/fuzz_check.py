@@ -11,7 +11,9 @@ Usage:
   manifest.json          cells: family, seed, tables {view: path}, sql
   out/<family>_s<seed>/  spark result parquet
 
-Writes the artifact (default FUZZ_r13.json at the repo root): per-cell
+Writes the artifact (default target/fuzz_check.json, which is not
+committed; relative paths are taken from the repo root, so pass
+`--artifact FUZZ_rN.json` to write a round artifact there): per-cell
 verdicts, per-family rollup, and a summary. Exit 1 on any divergence.
 A diverging cell is replayable byte-identically from its (family,
 seed) via Fuzz.cellSeed — pin it as a permanent fixture before fixing.
@@ -110,7 +112,9 @@ def main(fuzz_dir, artifact):
         "failures": failures,
         "results": results,
     }
-    with open(os.path.join(REPO, artifact), "w") as f:
+    path = os.path.join(REPO, artifact)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "w") as f:
         json.dump(summary, f, indent=1)
     print(f"{n_ok}/{len(cells)} cells OK across {manifest['n_families']} "
           f"families ({len(gen_errors)} generation errors) -> {artifact}")
@@ -119,7 +123,7 @@ def main(fuzz_dir, artifact):
 
 if __name__ == "__main__":
     argv = sys.argv[1:]
-    art = "FUZZ_r13.json"
+    art = os.path.join("target", "fuzz_check.json")
     if "--artifact" in argv:
         i = argv.index("--artifact")
         art = argv[i + 1]
