@@ -2,9 +2,9 @@ package graft.sinks
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** The serving star schema (SURVEY §2 K1–K3; DDL at
   * dags/utils.py:98-124):
@@ -52,10 +52,13 @@ object StarSchemaSink {
     p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
   }
 
+  /** `name` must be a declared table, whether or not it exists yet. */
   private def readIfExists(
-      s: SparkSession, warehouse: String, name: String): Option[DataFrame] =
+      s: SparkSession, warehouse: String, name: String): Option[DataFrame] = {
+    require(Schemas.contains(name), s"not a star-schema table: $name")
     if (exists(s, tablePath(warehouse, name))) Some(readTable(s, warehouse, name))
     else None
+  }
 
   /** K1: create-if-not-exists — parquet tables materialize on first
     * append; this just pre-creates empty frames for introspection.
@@ -68,10 +71,10 @@ object StarSchemaSink {
           .write.mode(SaveMode.Overwrite).parquet(path)
     }
 
-  /** K2 generalized: idempotent append with ON CONFLICT DO NOTHING
-    * parity. `naturalKeys` mirror the DB uniqueness constraints
-    * (weather.DateTime; traffic.date_id). Returns rows actually
-    * appended.
+  /** K2: idempotent append with ON CONFLICT DO NOTHING parity to
+    * `table`, `weather` or `traffic`. `naturalKeys` mirror the DB
+    * uniqueness constraints (weather.DateTime; traffic.date_id).
+    * Returns rows actually appended.
     *
     * `rowKeys` (optional) is a FINER within-batch identity grain:
     * when the natural key is null for several genuinely distinct
@@ -155,43 +158,41 @@ object StarSchemaSink {
     * half of K2, shared by the parquet and JDBC sinks): range-
     * partition by the order keys (partition i's keys all sort before
     * partition i+1's) and sort within each partition; the rows are
-    * materialized once (a local checkpoint, released afterwards), so
-    * the size scan and the write read the same partitions. One job
-    * counts each partition's rows (O(#partitions) longs reach the
-    * driver, like any job's task stats), and a row's id is `maxId` +
-    * its partition's prefix offset (a literal array indexed by
-    * `spark_partition_id()`) + its position within the partition + 1.
-    * No shuffle beyond the range partition and never a global
-    * single-partition window; the assignment is identical to
-    * `maxId + row_number()` over the order keys, which must identify
-    * a row within `fresh`. Returns the appended row count; `write`
-    * runs only when there is something to append.
+    * persisted once (released afterwards), so the size scan and the
+    * write read the same partitions. One job counts each partition's
+    * rows (O(#partitions) longs reach the driver, like any job's task
+    * stats), and a row's id is `maxId` + its partition's prefix offset
+    * (a literal array indexed by `spark_partition_id()`) + its position
+    * within the partition + 1. No shuffle beyond the range partition
+    * and never a global single-partition window; the assignment is
+    * identical to `maxId + row_number()` over the order keys, which
+    * must identify a row within `fresh`. The persisted rows keep their
+    * lineage, so a partition lost with an executor is recomputed to
+    * the same rows in the same order. Returns the appended row count;
+    * `write` runs only when there is something to append.
     */
   private[sinks] def appendWithIds(
       fresh: DataFrame,
       orderKeys: Seq[String],
       maxId: Long)(write: DataFrame => Unit): Long = {
     val keyCols = orderKeys.map(col)
-    // a local checkpoint, not a cache: cached plans keep every range
-    // partition (AQE may not coalesce them), so a small batch would be
-    // written as one file per shuffle partition
-    val ranged = fresh.repartitionByRange(keyCols: _*)
-      .sortWithinPartitions(keyCols: _*).localCheckpoint(eager = false)
+    val sorted = fresh.repartitionByRange(keyCols: _*)
+      .sortWithinPartitions(keyCols: _*)
+    // the executed plan's rows, not a cached plan: cached plans keep
+    // every range partition (AQE may not coalesce them), so a small
+    // batch would be written as one file per shuffle partition
+    val rows = sorted.rdd.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val sizes = ranged.rdd.mapPartitions(rows => Iterator(rows.size.toLong))
-        .collect()
+      val sizes = rows.mapPartitions(it => Iterator(it.size.toLong)).collect()
       val n = sizes.sum
       if (n > 0) {
         val offsets = sizes.scanLeft(maxId)(_ + _).init
-        write(ranged.withColumn("id",
-          typedLit(offsets).getItem(spark_partition_id()) +
+        write(fresh.sparkSession.createDataFrame(rows, sorted.schema)
+          .withColumn("id", typedLit(offsets).getItem(spark_partition_id()) +
             (monotonically_increasing_id().bitwiseAND(RowInPartition) + 1)))
       }
       n
-    } finally ranged.queryExecution.logical match {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+    } finally rows.unpersist(blocking = false)
   }
 
   /** K3: FK-resolving traffic append — J2 left join replaces the
@@ -245,10 +246,9 @@ object StarSchemaSink {
     } finally resolved.unpersist()
   }
 
-  /** A table of the star schema; the two declared tables are read with
-    * their declared schemas (no inference job).
+  /** A table of the star schema, read with its declared schema (no
+    * inference job); a name other than `weather` or `traffic` fails.
     */
   def readTable(s: SparkSession, warehouse: String, name: String): DataFrame =
-    Schemas.get(name).fold(s.read)(s.read.schema)
-      .parquet(tablePath(warehouse, name))
+    s.read.schema(Schemas(name)).parquet(tablePath(warehouse, name))
 }

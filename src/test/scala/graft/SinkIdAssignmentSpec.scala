@@ -53,14 +53,19 @@ class SinkIdAssignmentSpec extends SparkSpec {
     rows.toDF("date_id", "DateTime", "Intensity").repartition(8)
 
   /** Appends the seed, then the batch, through `append`, and checks the
-    * table `read` returns.
+    * table `read` returns and that each append releases what it persists.
     */
   private def checkIds(append: DataFrame => Long, read: () => DataFrame): Unit = {
+    // the context cleaner may drop other RDDs meanwhile; none may be added
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     val key = "spark.sql.adaptive.coalescePartitions.enabled"
     spark.conf.set(key, "false") // keep all 8 range partitions
     try {
       assert(append(frame(seed)) == seed.size.toLong)
+      assert(leaked.isEmpty, leaked)
       assert(append(frame(batch)) == expected.size.toLong)
+      assert(leaked.isEmpty, leaked)
     } finally spark.conf.unset(key)
     val got = read().select("id", "date_id", "Intensity").collect()
       .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long]), r.getInt(2)))

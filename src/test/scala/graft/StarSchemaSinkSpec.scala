@@ -110,4 +110,15 @@ class StarSchemaSinkSpec extends SparkSpec {
     assert(StarSchemaSink.appendTraffic(spark, wh, preds) == 0L)
     assert(StarSchemaSink.readTable(spark, wh, "traffic").count() == 3L)
   }
+
+  test("a table other than weather or traffic is refused, even before " +
+      "its first append") {
+    val wh = tmpDir("wh-unknown")
+    val batch = Seq((1L, "a")).toDF("k", "v")
+    intercept[IllegalArgumentException](
+      StarSchemaSink.idempotentAppend(spark, wh, "other", batch, Seq("k")))
+    assert(!new java.io.File(s"$wh/other").exists)
+    intercept[NoSuchElementException](
+      StarSchemaSink.readTable(spark, wh, "other"))
+  }
 }
