@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components over a pair list — the step that
@@ -11,23 +11,39 @@ import org.apache.spark.sql.functions._
   * training-data-pipeline extension where A~B, B~C must collapse to
   * one cluster {A,B,C} even when A~C was never emitted as a pair.
   *
-  * Algorithm: alternating large-star / small-star (Kiveris et al.,
-  * "Connected Components in MapReduce and Beyond", SoCC'14) — the
-  * standard O(log² n)-round formulation. Each half-round is one
-  * shuffle on node id (groupBy-min + join back); no per-node
-  * neighbor arrays are materialized, so hub nodes skew a groupBy
-  * (AQE-handled) rather than building a giant collect_list. Naive
-  * min-label propagation needs O(graph diameter) rounds — a 1M-long
-  * chain of near-dup shards would need 1M shuffles; star contraction
-  * collapses it in ~log² rounds, which is the property that matters
-  * at 100 TB.
+  * [[run]] has four steps:
+  *  1. Local contraction. Each input partition's canonical edges are
+  *     replaced by the star edges `(local min, v)` of a partition-local
+  *     union-find over the same node set. Connectivity, and so the
+  *     min-id labeling, is unchanged; the step rides the stage that
+  *     canonicalizes the edges (no extra job or exchange). Edges that
+  *     the upstream plan already co-locates collapse here instead of
+  *     costing contraction rounds.
+  *  2. Star rounds. Alternating large-star / small-star (Kiveris et
+  *     al., "Connected Components in MapReduce and Beyond", SoCC'14),
+  *     O(log² n) rounds. Each half-round is one shuffle on node id
+  *     (groupBy-min + join back); no per-node neighbor arrays are
+  *     materialized, so hub nodes skew a groupBy (AQE-handled) rather
+  *     than building a giant collect_list. Naive min-label propagation
+  *     needs O(diameter) rounds.
+  *  3. Read-off. At the fixpoint the edge set is exactly
+  *     `{(min C, v) : v ∈ C, v ≠ min C}`, so the labels are the stars'
+  *     `(dst → src)` rows plus each root mapped to itself.
+  *  4. Raise. A loop that has not reached its fixpoint after `maxIter`
+  *     rounds throws instead of returning labels that are not one.
   *
-  * Driver-side footprint per round: one (count, hashsum) action for
-  * the convergence test — O(1) rows to the driver, never the edge
-  * set. `localCheckpoint` truncates lineage each round so plan depth
-  * stays constant across iterations.
+  * Driver-side footprint per round: one (count, hashsum) observation
+  * riding the round's checkpoint — O(1) rows to the driver, never the
+  * edge set. `localCheckpoint` truncates lineage each round so plan
+  * depth stays constant across iterations.
   */
 object ConnectedComponents {
+
+  /** Node-table bound of the local contraction: a partition's sorted
+    * edges are contracted in runs that touch at most about this many
+    * nodes, so a task holds O(bound) state at any partition size.
+    */
+  private[graft] val LocalNodeCap: Int = 1 << 20
 
   /** Components of the undirected graph given by `edges(srcCol, dstCol)`
     * (Long-compatible ids). Returns one row per distinct endpoint of a
@@ -35,38 +51,33 @@ object ConnectedComponents {
     * minimum node id in the component (deterministic, partitioning-
     * invariant). Nodes appearing only in self-loops are dropped with
     * the loops (trivial singleton components carry no dedup signal).
+    * Throws `IllegalStateException` when `maxIter` star rounds pass
+    * without a fixpoint.
     */
   def run(
       edges: DataFrame,
       srcCol: String = "src",
       dstCol: String = "dst",
-      maxIter: Int = 25): DataFrame = {
-    // Canonical undirected edge set: (src < dst), self-loops dropped.
-    // Checkpointed once so the (possibly expensive) upstream pair
-    // generation runs exactly once; `nodes` derives from this set.
+      maxIter: Int = 25): DataFrame =
+    runCapped(edges, srcCol, dstCol, maxIter, LocalNodeCap)
+
+  /** [[run]] with the local contraction's node bound as a parameter. */
+  private[graft] def runCapped(
+      edges: DataFrame,
+      srcCol: String,
+      dstCol: String,
+      maxIter: Int,
+      nodeCap: Int): DataFrame = {
     // sever: localCheckpoint carries the pre-checkpoint sizeInBytes
-    // estimate, which compounds per contraction round (the KCore
-    // stats-walk hazard, r12 house rule: EVERY fixed-point loop
-    // severs stats at its checkpoints — GraftStatsSever rewraps the
-    // checkpointed InternalRow RDD at zero conversion cost).
-    // r14 A/B note: severSized (actual-size stats, letting the star
-    // rounds broadcast the groupBy-min side) was measured here and
-    // LOST — the CC family read consistently ~0.6-1.1 s slower per
-    // entry (cc_clusters 3.14 → 3.8-4.2 s build at sf0.1): two
-    // driver-side broadcast constructions per round cost more than
-    // the AQE-coalesced tiny shuffles they replace, at every scale
-    // where the mins table is broadcastable at all (it is |V|-sized,
-    // so at 100 TB the shuffle plan is the right one anyway). The
-    // unknown-size sever stays.
+    // estimate, which would compound per contraction round (the
+    // stats-walk hazard every checkpointing loop must cut).
+    // GraftStatsSever rewraps the checkpointed InternalRow RDD with
+    // unknown-size stats at zero conversion cost.
     def sever(df: DataFrame): DataFrame =
       org.apache.spark.sql.GraftStatsSever.sever(df)
-    // r14 (guide §1.2, fewer passes): the convergence fingerprint is
-    // OBSERVED as a side effect of each round's eager localCheckpoint
-    // (CollectMetrics rides the materialization) instead of running a
-    // separate scan+agg job over the checkpointed edges per round —
-    // same expressions over the same rows, so the per-round signatures,
-    // convergence decisions and output are bit-identical; one fewer
-    // Spark job (and one fewer full edge scan) per contraction round.
+    // The convergence fingerprint is observed as a side effect of each
+    // round's eager localCheckpoint (CollectMetrics rides the
+    // materialization), not by a separate scan+agg job per round.
     def observedCheckpoint(df: DataFrame, label: String)
         : (DataFrame, (Long, Long)) = {
       val obs = org.apache.spark.sql.Observation(label)
@@ -78,22 +89,17 @@ object ConnectedComponents {
         (m("n").asInstanceOf[Long],
           m("lo").asInstanceOf[Long] + 31L * m("hi").asInstanceOf[Long]))
     }
-    val (canonical, fp0) = observedCheckpoint(
-      edges
-        .select(
-          least(col(srcCol).cast("long"), col(dstCol).cast("long")).as("src"),
-          greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .distinct(),
-      "cc_fp_init")
+    // Canonical undirected edges (src < dst, self-loops dropped),
+    // locally contracted, deduplicated and checkpointed once, so the
+    // (possibly expensive) upstream pair generation runs exactly once.
+    val canonical = edges
+      .select(
+        least(col(srcCol).cast("long"), col(dstCol).cast("long")).as("src"),
+        greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("dst"))
+      .filter(col("src") =!= col("dst"))
+    var (e, prev) = observedCheckpoint(
+      localStars(canonical, nodeCap).distinct(), "cc_fp_init")
 
-    val nodes = canonical.select(col("src").as("id"))
-      .union(canonical.select(col("dst").as("id")))
-      .distinct()
-
-    var e = canonical
-
-    var prev = fp0
     var converged = false
     var it = 0
     while (!converged && it < maxIter) {
@@ -104,13 +110,140 @@ object ConnectedComponents {
       e = next
       it += 1
     }
+    if (!converged)
+      throw new IllegalStateException(
+        s"ConnectedComponents: no fixpoint within maxIter = $maxIter " +
+          s"star rounds (rounds run: $it)")
 
-    // Fixpoint edges form stars child→min-root. Roots (and isolated
-    // canonical nodes, if any) map to themselves.
-    nodes
-      .join(e.select(col("dst").as("id"), col("src").as("component")),
-        Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+    // Converged edges are stars (root = component min) → child.
+    e.select(col("dst").as("id"), col("src").as("component"))
+      .union(e.select(col("src").as("id"), col("src").as("component"))
+        .distinct())
+  }
+
+  /** Step 1 of [[run]]: each partition of the canonical `(src, dst)`
+    * edges, sorted on `(src, dst)`, becomes the star edges
+    * `(local min, v)`, one per non-root node of a partition-local
+    * union-find. The node table is flushed when it reaches `nodeCap`
+    * nodes; the sort fixes the flush points, so the output is a
+    * function of the partition's edge multiset, not of its row order
+    * (a retried task after a shuffle emits the same rows).
+    */
+  private[graft] def localStars(canonical: DataFrame, nodeCap: Int): DataFrame = {
+    require(nodeCap >= 2, s"nodeCap must be at least 2, got $nodeCap")
+    val pair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+    canonical
+      .sortWithinPartitions("src", "dst")
+      .as(pair)
+      .mapPartitions(it => new LocalStars(it, nodeCap))(pair)
+      .toDF("src", "dst")
+  }
+
+  /** Union-find over a stream of edges in runs of at most about
+    * `nodeCap` nodes; after each run, emits `(min, v)` for every
+    * non-root node `v` of the run, in first-seen order. Union keeps the
+    * smaller id as the root, so each root is its set's minimum.
+    * Primitive storage: an open-addressing id → index table plus the
+    * id and parent arrays, reused across runs.
+    */
+  private final class LocalStars(in: Iterator[(Long, Long)], nodeCap: Int)
+      extends Iterator[(Long, Long)] {
+    private var ids = new Array[Long](64)
+    private var parent = new Array[Int](64)
+    private var n = 0
+    private var slotKey = new Array[Long](128)
+    private var slotIdx = new Array[Int](128) // index + 1; 0 = empty
+    private var draining = false
+    private var emitAt = 0
+    private var pending: (Long, Long) = null
+
+    private def slotOf(v: Long, mask: Int): Int = {
+      var h = java.lang.Long.hashCode(v * 0x9E3779B97F4A7C15L) & mask
+      while (slotIdx(h) != 0 && slotKey(h) != v) h = (h + 1) & mask
+      h
+    }
+
+    private def indexOf(v: Long): Int = {
+      val h = slotOf(v, slotIdx.length - 1)
+      if (slotIdx(h) != 0) slotIdx(h) - 1
+      else {
+        if (n == ids.length) {
+          ids = java.util.Arrays.copyOf(ids, 2 * n)
+          parent = java.util.Arrays.copyOf(parent, 2 * n)
+        }
+        ids(n) = v
+        parent(n) = n
+        slotKey(h) = v
+        slotIdx(h) = n + 1
+        n += 1
+        if (2 * n > slotIdx.length) rehash()
+        n - 1
+      }
+    }
+
+    private def rehash(): Unit = {
+      slotKey = new Array[Long](2 * slotKey.length)
+      slotIdx = new Array[Int](slotKey.length)
+      val mask = slotIdx.length - 1
+      var i = 0
+      while (i < n) {
+        val h = slotOf(ids(i), mask)
+        slotKey(h) = ids(i)
+        slotIdx(h) = i + 1
+        i += 1
+      }
+    }
+
+    private def find(i0: Int): Int = {
+      var i = i0
+      while (parent(i) != i) {
+        parent(i) = parent(parent(i)) // path halving
+        i = parent(i)
+      }
+      i
+    }
+
+    private def union(a: Int, b: Int): Unit = {
+      val ra = find(a)
+      val rb = find(b)
+      if (ra != rb) {
+        if (ids(ra) < ids(rb)) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+
+    override def hasNext: Boolean = {
+      while (pending == null) {
+        if (draining) {
+          while (pending == null && emitAt < n) {
+            val r = find(emitAt)
+            if (r != emitAt) pending = (ids(r), ids(emitAt))
+            emitAt += 1
+          }
+          if (pending == null) {
+            draining = false
+            n = 0
+            java.util.Arrays.fill(slotIdx, 0)
+            if (!in.hasNext) return false
+          }
+        } else {
+          while (n < nodeCap && in.hasNext) {
+            val (a, b) = in.next()
+            union(indexOf(a), indexOf(b))
+          }
+          if (n == 0) return false
+          draining = true
+          emitAt = 0
+        }
+      }
+      true
+    }
+
+    override def next(): (Long, Long) = {
+      if (!hasNext) throw new NoSuchElementException
+      val r = pending
+      pending = null
+      r
+    }
   }
 
   /** Components plus per-cluster stats: size and keeper (= component
@@ -128,7 +261,7 @@ object ConnectedComponents {
   /** Incremental maintenance: fold a batch of NEW edges into an
     * existing labeling without re-clustering the corpus — the 100 TB
     * ingest path (a continuously-ingesting corpus cannot re-run
-    * global CC per arrival batch; VERDICT r7 #4).
+    * global CC per arrival batch).
     *
     * `oldLabels` is a prior [[run]] output `(id, component)` with the
     * min-member-id component convention. Exactly equivalent to a full
@@ -182,7 +315,7 @@ object ConnectedComponents {
     updatedOld.unionByName(newNodes.select("id", "component"))
   }
 
-  /** Deletion-aware maintenance (r11 — the compliance-takedown path):
+  /** Deletion-aware maintenance (the compliance-takedown path):
     * remove `deletedIds` (and every edge incident to one) from an
     * existing labeling WITHOUT re-clustering the corpus. The dual of
     * [[incremental]]: additions only MERGE components (batch-sized

@@ -50,6 +50,19 @@ import org.apache.spark.sql.functions._
   */
 object KCore {
 
+  /** localCheckpoint + stats severance for every table a peel loop
+    * materializes. `Dataset.localCheckpoint` carries the PRE-checkpoint
+    * sizeInBytes estimate, whose BigInt digit count grows ~3× per round
+    * through the degree-agg × two-semi-join size walk; left in place,
+    * Catalyst's SizeInBytesOnlyStatsPlanVisitor burns seconds to
+    * minutes of driver CPU per checkpoint past ~10 rounds. `severSized`
+    * replaces it with the ACTUAL materialized size as a flat leaf stat,
+    * so the per-round membership joins broadcast the alive set when it
+    * genuinely fits and keep the shuffle plan when it does not.
+    */
+  private def ckptReset(df: DataFrame): DataFrame =
+    org.apache.spark.sql.GraftStatsSever.severSized(df.localCheckpoint())
+
   /** Nodes of the k-core approximation after `iters` synchronous peel
     * rounds over the undirected simple graph induced by
     * (srcCol, dstCol): self-loops dropped, parallel/reverse edges
@@ -61,25 +74,7 @@ object KCore {
       k: Int, iters: Int, checkpointEvery: Int = 1): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(iters >= 1, "iters must be >= 1")
-    // ckptReset: localCheckpoint + STATS RESET (the r10 hazard, now
-    // applied to the peel's own rounds): Dataset.localCheckpoint
-    // carries the PRE-checkpoint sizeInBytes estimate, whose BigInt
-    // digit count grows ~3× per peel round through the degree-agg ×
-    // two-semi-join size walk. At the original 8 rounds that is
-    // ~10^4 digits and invisible; the 14-round deletion gate pushed
-    // it far enough that SizeInBytesOnlyStatsPlanVisitor burned
-    // ~40 s of DRIVER CPU per bench run (42.8 s vs ~2 s). Rebuilding
-    // a fresh scan over the checkpointed rows restores unknown-size
-    // defaults; cost is one row conversion per materialized table.
-    // r14: severSized — same severance, but with the ACTUAL
-    // materialized size as a flat leaf stat, so the per-round
-    // membership joins can broadcast the alive set when it genuinely
-    // fits (unknown-size pinned them to two full shuffles of the edge
-    // list per round); a large alive set reports large and keeps the
-    // shuffle plan (guide §3.1).
-    def ckptReset(df: DataFrame): DataFrame =
-      org.apache.spark.sql.GraftStatsSever.severSized(df.localCheckpoint())
-    // r14: the peel's eager rounds run under the raised AQE coalescing
+    // The peel's eager rounds run under the raised AQE coalescing
     // floor (GraftSession.withLoopFloor) — the ~100-300 KB per-round
     // states are round-latency-bound and split into many tiny tasks
     // under the session's lowered verify-stage floor (measured:
@@ -149,18 +144,7 @@ object KCore {
       checkpointEvery: Int = 1): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(iters >= 1, "iters must be >= 1")
-    // same ckptReset as [[peel]] — r12: the r11 stats-reset house rule
-    // was applied to peel's rounds but NOT here, and the warm loop's
-    // per-round `alive` checkpoints compound the same ~3×-digits/round
-    // sizeInBytes estimate; invisible at the warm gate's 8 rounds,
-    // q_g_kcore_mixed's first bench at 14 rounds read 136 s of driver
-    // stats-walk vs ~5 s of real work (the 42.8 s kcore_delete
-    // incident, round three — ANY fixed-point loop that checkpoints
-    // must reset stats at the checkpoint, no exceptions).
-    // r14: severSized, same rationale as [[peel]]'s ckptReset.
-    def ckptReset(df: DataFrame): DataFrame =
-      org.apache.spark.sql.GraftStatsSever.severSized(df.localCheckpoint())
-    // r14: loop floor pin, same rationale as [[peel]].
+    // loop floor pin, same rationale as [[peel]].
     var e: DataFrame = null
     graft.GraftSession.withLoopFloor(edges.sparkSession) {
       e = ckptReset(edges
@@ -168,18 +152,6 @@ object KCore {
           greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
         .filter(col("u") =!= col("v"))
         .distinct())
-      // STATS RESET, not just a lineage cut: Dataset.localCheckpoint
-      // carries the PRE-checkpoint sizeInBytes ESTIMATE into the
-      // LogicalRDD it returns (not the materialized size). A prior core
-      // produced by an 8-round peel carries an estimate whose BigInt
-      // digit count grew ~3× per round (each round's size walk
-      // multiplies child estimates); compounding ~8 warm rounds on top
-      // pushed the estimate to ~10^8 digits and Catalyst's size-product
-      // walk (SizeInBytesOnlyStatsPlanVisitor) burned MINUTES of driver
-      // CPU per checkpoint — observed as a bench hang. Rebuilding a
-      // fresh scan over the already-checkpointed rows restores
-      // unknown-size defaults, at the cost of one row conversion per
-      // use of the node-sized pinned table.
       val pinned = ckptReset(
         priorCore.select(col("node").cast("long")).distinct())
       for (i <- 1 to iters) {
@@ -235,14 +207,12 @@ object KCore {
     val del = deletedIds
       .select(col(deletedIds.columns.head).cast("long").as("node"))
       .distinct()
-    // same stats-reset treatment as peelWarm: a checkpoint-carried
-    // size estimate on the prior core would compound through the
-    // peel's per-round checkpoints
-    val keep = org.apache.spark.sql.GraftStatsSever.severSized(
+    // a checkpoint-carried size estimate on the prior core would
+    // compound through the peel's per-round checkpoints
+    val keep = ckptReset(
       priorCore.select(col("node").cast("long"))
         .distinct()
-        .join(del, Seq("node"), "left_anti")
-        .localCheckpoint())
+        .join(del, Seq("node"), "left_anti"))
     val h = edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))

@@ -1,7 +1,11 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+
 import scala.util.Random
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.ConnectedComponents
@@ -35,8 +39,39 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   private def runCC(edges: Seq[(Long, Long)]): Map[Long, Long] =
-    ConnectedComponents.run(edges.toDF("src", "dst"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    labelsOf(ConnectedComponents.run(edges.toDF("src", "dst")))
+
+  /** `(id, component)` rows as a map; fails on a repeated id. */
+  private def labelsOf(df: DataFrame): Map[Long, Long] = {
+    val rows = df.collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(rows.map(_._1).distinct.length == rows.length, "repeated id")
+    rows.toMap
+  }
+
+  /** `edges`, in this row order, sliced into `parts` input partitions. */
+  private def spread(edges: Seq[(Long, Long)], parts: Int): DataFrame =
+    spark.sparkContext.parallelize(edges, parts).toDF("src", "dst")
+
+  private def randomEdges(rnd: Random, m: Int, n: Int): Seq[(Long, Long)] =
+    Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+
+  private object Jobs extends SparkListener {
+    val started = new AtomicLong
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      started.incrementAndGet()
+  }
+
+  /** `body`'s result and the Spark jobs it started. */
+  private def countingJobs[T](body: => T): (T, Long) = {
+    spark.sparkContext.addSparkListener(Jobs)
+    try {
+      org.apache.spark.GraftSparkAccess.drainListenerBus(spark.sparkContext)
+      val before = Jobs.started.get
+      val r = body
+      org.apache.spark.GraftSparkAccess.drainListenerBus(spark.sparkContext)
+      (r, Jobs.started.get - before)
+    } finally spark.sparkContext.removeSparkListener(Jobs)
+  }
 
   test("random graphs across seeds match union-find") {
     for (seed <- Seq(1, 7, 42)) {
@@ -66,6 +101,70 @@ class ConnectedComponentsSpec extends SparkSpec {
       1L -> 1L, 5L -> 1L, 7L -> 1L, 10L -> 1L,
       20L -> 20L, 21L -> 20L, 22L -> 20L,
       40L -> 40L, 41L -> 40L))
+  }
+
+  test("random graphs over 1, 3 and 16 input partitions, in shuffled " +
+      "row order, match union-find") {
+    for (seed <- Seq(5, 13, 77); parts <- Seq(1, 3, 16)) {
+      val rnd = new Random(seed)
+      // self-loops, duplicates and both orientations included
+      val edges = randomEdges(rnd, 600, 500)
+      val rows = new Random(seed * 31 + parts).shuffle(edges)
+      val got = labelsOf(ConnectedComponents.run(spread(rows, parts)))
+      assert(got == unionFind(edges.filter { case (a, b) => a != b }),
+        s"seed=$seed parts=$parts")
+    }
+  }
+
+  test("local contraction emits the same rows for two row orders of " +
+      "one partition, at most one edge per non-root node") {
+    val rnd = new Random(3)
+    val edges = randomEdges(rnd, 400, 300)
+      .collect { case (a, b) if a != b => (a min b, a max b) }
+    def contract(rows: Seq[(Long, Long)], cap: Int): Seq[(Long, Long)] =
+      ConnectedComponents.localStars(spread(rows, 1), cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    for (cap <- Seq(5, ConnectedComponents.LocalNodeCap)) {
+      val a = contract(edges, cap)
+      val b = contract(rnd.shuffle(edges), cap)
+      assert(a == b, s"cap=$cap")
+      assert(a.forall { case (s, d) => s < d })
+    }
+    val stars = contract(edges, ConnectedComponents.LocalNodeCap)
+    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+    val roots = unionFind(edges).values.toSet
+    assert(stars.map(_._2).distinct.length == stars.length)
+    assert(stars.length == nodes.length - roots.size)
+    assert(unionFind(stars) == unionFind(edges))
+  }
+
+  test("flush path: a node cap of a few nodes matches union-find") {
+    for (seed <- Seq(2, 9); cap <- Seq(2, 3, 7)) {
+      val rnd = new Random(seed)
+      val edges = randomEdges(rnd, 300, 200)
+      val got = labelsOf(ConnectedComponents.runCapped(
+        spread(edges, 3), "src", "dst", maxIter = 25, nodeCap = cap))
+      assert(got == unionFind(edges.filter { case (a, b) => a != b }),
+        s"seed=$seed cap=$cap")
+    }
+  }
+
+  test("32 chains of 32 nodes in one input partition: within 14 Spark " +
+      "jobs") {
+    val edges = for (c <- 0L until 32L; i <- 0L until 31L)
+      yield (c * 32 + i + 1, c * 32 + i)
+    val (got, jobs) = countingJobs(
+      labelsOf(ConnectedComponents.run(spread(edges, 1))))
+    assert(got == unionFind(edges))
+    assert(jobs <= 14, s"$jobs Spark jobs")
+  }
+
+  test("a path one edge per partition does not converge in one round: " +
+      "raises, naming the rounds") {
+    val path = (0L until 64L).map(i => (i, i + 1))
+    val err = intercept[IllegalStateException](
+      ConnectedComponents.run(spread(path, path.size), maxIter = 1))
+    assert(err.getMessage.contains("rounds run: 1"), err.getMessage)
   }
 
   test("empty edge set yields empty result") {
@@ -138,7 +237,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(l2 == unionFind(old ++ b1 ++ b2), l2)
   }
 
-  // ---- afterDeletions (r11): delete == full rebuild on survivors ----
+  // ---- afterDeletions: delete == full rebuild on survivors ----
 
   /** Ground truth for a deletion: full union-find over the surviving
     * edges; previously-labeled survivors with no surviving edge are
