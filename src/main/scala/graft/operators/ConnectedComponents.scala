@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
@@ -40,10 +42,13 @@ import org.apache.spark.sql.functions._
 object ConnectedComponents {
 
   /** Node-table bound of the local contraction: a partition's sorted
-    * edges are contracted in runs that touch at most about this many
-    * nodes, so a task holds O(bound) state at any partition size.
+    * edges are contracted in runs that touch at most this many nodes,
+    * so a task holds O(bound) state at any partition size. The table
+    * (a `LongMap` with boxed indices plus the id and parent arrays)
+    * costs up to about 80 bytes a node, outside Spark's memory manager:
+    * at most about 20 MB per task at this bound.
     */
-  private[graft] val LocalNodeCap: Int = 1 << 20
+  private[graft] val LocalNodeCap: Int = 1 << 18
 
   /** Components of the undirected graph given by `edges(srcCol, dstCol)`
     * (Long-compatible ids). Returns one row per distinct endpoint of a
@@ -139,60 +144,34 @@ object ConnectedComponents {
       .toDF("src", "dst")
   }
 
-  /** Union-find over a stream of edges in runs of at most about
-    * `nodeCap` nodes; after each run, emits `(min, v)` for every
-    * non-root node `v` of the run, in first-seen order. Union keeps the
-    * smaller id as the root, so each root is its set's minimum.
-    * Primitive storage: an open-addressing id → index table plus the
-    * id and parent arrays, reused across runs.
+  /** Union-find over a stream of edges in runs of at most `nodeCap`
+    * nodes; after each run, emits `(min, v)` for every non-root node `v`
+    * of the run, in first-seen order. Union keeps the smaller id as the
+    * root, so each root is its set's minimum. A run ends before an edge
+    * that could take it past `nodeCap` nodes, so the id and parent
+    * arrays never outgrow `nodeCap`.
     */
   private final class LocalStars(in: Iterator[(Long, Long)], nodeCap: Int)
       extends Iterator[(Long, Long)] {
-    private var ids = new Array[Long](64)
-    private var parent = new Array[Int](64)
+    private val index = new mutable.LongMap[Int]
+    private var ids = new Array[Long](math.min(64, nodeCap))
+    private var parent = new Array[Int](ids.length)
     private var n = 0
-    private var slotKey = new Array[Long](128)
-    private var slotIdx = new Array[Int](128) // index + 1; 0 = empty
     private var draining = false
     private var emitAt = 0
     private var pending: (Long, Long) = null
 
-    private def slotOf(v: Long, mask: Int): Int = {
-      var h = java.lang.Long.hashCode(v * 0x9E3779B97F4A7C15L) & mask
-      while (slotIdx(h) != 0 && slotKey(h) != v) h = (h + 1) & mask
-      h
-    }
-
-    private def indexOf(v: Long): Int = {
-      val h = slotOf(v, slotIdx.length - 1)
-      if (slotIdx(h) != 0) slotIdx(h) - 1
-      else {
+    private def indexOf(v: Long): Int =
+      index.getOrElseUpdate(v, {
         if (n == ids.length) {
-          ids = java.util.Arrays.copyOf(ids, 2 * n)
-          parent = java.util.Arrays.copyOf(parent, 2 * n)
+          ids = java.util.Arrays.copyOf(ids, math.min(2 * n, nodeCap))
+          parent = java.util.Arrays.copyOf(parent, ids.length)
         }
         ids(n) = v
         parent(n) = n
-        slotKey(h) = v
-        slotIdx(h) = n + 1
         n += 1
-        if (2 * n > slotIdx.length) rehash()
         n - 1
-      }
-    }
-
-    private def rehash(): Unit = {
-      slotKey = new Array[Long](2 * slotKey.length)
-      slotIdx = new Array[Int](slotKey.length)
-      val mask = slotIdx.length - 1
-      var i = 0
-      while (i < n) {
-        val h = slotOf(ids(i), mask)
-        slotKey(h) = ids(i)
-        slotIdx(h) = i + 1
-        i += 1
-      }
-    }
+      })
 
     private def find(i0: Int): Int = {
       var i = i0
@@ -222,11 +201,11 @@ object ConnectedComponents {
           if (pending == null) {
             draining = false
             n = 0
-            java.util.Arrays.fill(slotIdx, 0)
+            index.clear()
             if (!in.hasNext) return false
           }
         } else {
-          while (n < nodeCap && in.hasNext) {
+          while (n + 2 <= nodeCap && in.hasNext) {
             val (a, b) = in.next()
             union(indexOf(a), indexOf(b))
           }

@@ -138,6 +138,17 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(unionFind(stars) == unionFind(edges))
   }
 
+  test("a run never outgrows the node cap: at a cap of 3 nodes every " +
+      "run holds one edge, so the contraction passes the sorted edges " +
+      "through") {
+    val rnd = new Random(4)
+    val edges = randomEdges(rnd, 200, 50)
+      .collect { case (a, b) if a != b => (a min b, a max b) }
+    val got = ConnectedComponents.localStars(spread(rnd.shuffle(edges), 1), 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(got == edges.sorted)
+  }
+
   test("flush path: a node cap of a few nodes matches union-find") {
     for (seed <- Seq(2, 9); cap <- Seq(2, 3, 7)) {
       val rnd = new Random(seed)
